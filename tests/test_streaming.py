@@ -2925,3 +2925,146 @@ def test_rebucket_refuses_concurrent_fold(
         assert _json.load(f)["extra"]["buckets"] == 4
     info = P.rebucket_keyed_state(spark, state_dir, 8)
     assert info["table"] == "mviewk_rb4to8"
+
+
+# ------------------------------------------- per-trigger job-count pins --
+#
+# Spark jobs each trigger of a persisted fold runs, over a 3-file source
+# delivered one file per trigger (maxFilesPerTrigger=1, state_dir set).
+# Job counts do not drift with the host the way wall time does, so these
+# pins show that a change to the fold code left each trigger's plans
+# as they were.
+
+_FOLD_JOBS_PER_TRIGGER = {
+    "kmv": [4, 7, 7],
+    "hll": [2, 3, 3],
+    "hist": [2, 3, 3],
+    "cms": [2, 3, 3],
+    "drift": [2, 3, 3],
+    "mview_snapshot": [16, 19, 19],
+    "mview_keyed": [17, 22, 22],
+    "mjoin_keyed": [17, 20, 19],
+}
+
+
+def _jobs_per_trigger(spark, q, steps):
+    """Run each step (it lands exactly one source file, so it wakes
+    exactly one trigger), drain the query, and count the new Spark jobs
+    in the query's job group — foreachBatch jobs run under the query's
+    runId group. The status store is filled from the listener bus
+    asynchronously, so the bus is drained before every read."""
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    group = str(q.runId)
+    seen = set(tracker.getJobIdsForGroup(group))
+    counts = []
+    for step in steps:
+        step()
+        q.processAllAvailable()
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        ids = set(tracker.getJobIdsForGroup(group))
+        counts.append(len(ids - seen))
+        seen |= ids
+    return counts
+
+
+def _sketch_fold_query(spark, tmp_path, fold):
+    from ahnlich_spark.streaming import pipeline as P
+
+    state_dir = str(tmp_path / "state")
+    if fold == "drift":
+        schema = "embedding array<float>"
+        df = spark.createDataFrame(
+            [([float(i % 7), float(i % 5), -float(i % 3)],)
+             for i in range(90)], schema,
+        )
+        parts = [df.filter(F.abs(F.xxhash64("embedding")) % 3 == i)
+                 for i in range(3)]
+        baseline = spark.createDataFrame(
+            [(d, 0) for d in range(3)], "dim long, mean_e9 long")
+    else:
+        schema = "g string, v string, x long"
+        df = spark.createDataFrame(
+            [(f"g{i % 2}", f"v-{i % 400}", (i * 13) % 1000)
+             for i in range(1200)], schema,
+        )
+        parts = [df.filter(F.abs(F.xxhash64("v", "x")) % 3 == i)
+                 for i in range(3)]
+    watch, add_file = _ordered_files(tmp_path, spark, [], schema)
+    stream = (spark.readStream.schema(schema)
+              .option("maxFilesPerTrigger", 1).parquet(watch))
+    start = {
+        "kmv": lambda: P.streaming_kmv_distinct(
+            stream, ["g"], "v", k=32, state_dir=state_dir),
+        "hll": lambda: P.streaming_hll_distinct(
+            stream, ["g"], "v", m=128, state_dir=state_dir),
+        "hist": lambda: P.streaming_histogram_quantiles(
+            stream, ["g"], "x", 50, [0.5, 0.9], state_dir=state_dir),
+        "cms": lambda: P.streaming_cms_counts(
+            stream, [], "v", depth=4, width=32, state_dir=state_dir),
+        "drift": lambda: P.streaming_embedding_drift(
+            stream, baseline, state_dir=state_dir),
+    }[fold]
+    steps = [lambda p=p: add_file(p) for p in parts]
+    return start()[0], steps
+
+
+def _view_fold_query(spark, engine, tmp_path, fold):
+    from ahnlich_spark.operators.predicates import Equals
+    from ahnlich_spark.streaming import pipeline as P
+
+    state_dir = str(tmp_path / "state")
+    if fold == "mjoin_keyed":
+        engine.create_store("jpa", dimension=2, predicates=["k"])
+        engine.create_store("jpb", dimension=2, predicates=["k", "w"])
+        engine.set("jpa", [([1.0, 0.0], {"k": "p"}),
+                           ([0.0, 1.0], {"k": "q"})])
+        engine.set("jpb", [([5.0, 0.0], {"k": "p", "w": "2"}),
+                           ([6.0, 0.0], {"k": "q", "w": "3"})])
+        feed = engine.store_changes_stream(
+            "jpa", max_files_per_trigger=1
+        ).unionByName(
+            engine.store_changes_stream("jpb", max_files_per_trigger=1))
+        q, _ = P.streaming_materialized_join(
+            feed, engine, "jpa", engine, "jpb",
+            F.col("a_meta")["k"]["s"], F.col("b_meta")["k"]["s"],
+            F.col("b_meta")["w"]["s"],
+            {"s_e2": (F.element_at("a_key", 1) * 100).cast("long")},
+            state_dir=state_dir, sink="keyed", buckets=8,
+        )
+        steps = [
+            lambda: engine.set("jpa", [([0.0, 1.0], {"k": "p"})]),
+            lambda: engine.set("jpb", [([5.0, 0.0], {"k": "p", "w": "9"})]),
+            lambda: engine.del_pred("jpb", Equals("k", "q")),
+        ]
+        return q, steps
+    name = "jp" + fold.split("_")[1][0]
+    replica, grp, measures = _keyed_fixture(spark, engine, name)
+    q, _ = P.streaming_materialized_agg(
+        engine.store_changes_stream(name, max_files_per_trigger=1),
+        replica, name + "d", grp, measures, state_dir=state_dir,
+        sink=fold.split("_")[1], buckets=8,
+    )
+    steps = [
+        lambda: engine.set(name, [([5.0, 5.0], {"t": "d"})]),
+        lambda: engine.set(name, [([0.0, 1.0], {"t": "c"})]),
+        lambda: engine.del_pred(name, Equals("t", "a")),
+    ]
+    return q, steps
+
+
+@pytest.mark.parametrize("fold", sorted(_FOLD_JOBS_PER_TRIGGER))
+def test_fold_jobs_per_trigger_pinned(spark, engine, tmp_path, fold):
+    """Per-trigger Spark job counts of every persisted sketch fold and
+    view sink are pinned: the fold skeletons are shared code, and a
+    change to them that adds a pass (or moves the observed replay
+    stats off the fold's own job) shows here as a count change."""
+    if fold in ("kmv", "hll", "hist", "cms", "drift"):
+        q, steps = _sketch_fold_query(spark, tmp_path, fold)
+    else:
+        q, steps = _view_fold_query(spark, engine, tmp_path, fold)
+    try:
+        counts = _jobs_per_trigger(spark, q, steps)
+    finally:
+        q.stop()
+    assert counts == _FOLD_JOBS_PER_TRIGGER[fold], counts
