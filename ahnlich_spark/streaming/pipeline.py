@@ -35,17 +35,27 @@ from ahnlich_spark.functions import text as X
 
 # ------------------------------------------------ fold-state persistence --
 #
-# The driver-state folds below (heavy hitters, KMV, ...) keep their
-# running state in Python; without persistence a driver restart loses
-# it. ``state_dir`` makes them checkpoint-safe with the standard
-# foreachBatch transactional recipe: after folding batch N the state is
-# written ATOMICALLY keyed by batch_id, and a re-delivered batch with
-# id <= the last persisted id is SKIPPED (its rows are already in the
-# state) — fold+persist is the transaction, replay is idempotent, so
-# the recovered answer equals the uninterrupted run whether the stream
-# restarts from a Spark checkpoint (ids continue, last uncommitted
-# batch replays) or re-reads an ordered file source from scratch (ids
-# restart at 0 and the committed prefix replays).
+# The folds below keep running state across micro-batches — a
+# DataFrame for the sketch folds and view sinks, a Python counter for
+# heavy hitters — that a driver restart would lose. ``state_dir`` makes
+# them checkpoint-safe with the standard foreachBatch transactional
+# recipe: after folding batch N the state is written ATOMICALLY keyed
+# by batch_id, and a re-delivered batch with id <= the last persisted
+# id is SKIPPED (its rows are already in the state) — fold+persist is
+# the transaction, replay is idempotent, so the recovered answer equals
+# the uninterrupted run whether the stream restarts from a Spark
+# checkpoint (ids continue, last uncommitted batch replays) or re-reads
+# an ordered file source from scratch (ids restart at 0 and the
+# committed prefix replays).
+#
+# Two skeletons carry the recipe, so each fold states only what
+# differs: ``_persisted_fold`` runs the DataFrame sketch folds (KMV,
+# HLL, histogram, CMS, embedding drift) over a ``_DfStatePersist``, and
+# ``_KeyedPartLog`` is the keyed view sinks' part log. The two
+# observe-metric hazards are handled in ``_persisted_fold``: it builds
+# the union with the batch frame as receiver itself, and it hands the
+# observed ledger stats only to ``_DfStatePersist.save``, which reads
+# them after its write has fully materialized the fold.
 
 
 def _atomic_write_json(path: str, obj: dict) -> None:
@@ -83,6 +93,45 @@ def _read_json(path: str) -> Optional[dict]:
                 f"state_dir and re-seed the fold (re-run from the source, "
                 f"or warm-start from a drained state) instead of reusing it"
             ) from e
+
+
+def _unusable_pointer(label: str, state_dir: str, what: str) -> ValueError:
+    """The error every fold raises for a pointer that parsed but cannot
+    be trusted: folding on from state of unknown provenance would
+    corrupt the answer silently, so the only recovery is a re-seed."""
+    return ValueError(
+        f"{label} fold state in {state_dir} has {what} — tampered, "
+        f"truncated, or written by a different fold; delete the "
+        f"state_dir and re-seed the fold instead of reusing it"
+    )
+
+
+def _require_pointer_keys(p: dict, keys, label: str, state_dir: str) -> None:
+    """Refuse a pointer that lost a field its load reads, with the
+    re-seed error instead of a bare KeyError."""
+    missing = [k for k in keys if k not in p]
+    if missing:
+        raise _unusable_pointer(label, state_dir,
+                                f"a pointer without {missing}")
+
+
+def _pointer_coords(label: str, state_dir: str, what: str, *pairs):
+    """The (version, segments) fold coordinates a view pointer records,
+    as int pairs; ``what`` names the pointer keys for the error."""
+    if not all(isinstance(c, (list, tuple)) and len(c) == 2 for c in pairs):
+        raise _unusable_pointer(
+            label, state_dir,
+            f"no usable fold coordinates (pointer {what} missing or "
+            f"malformed)",
+        )
+    return [(int(c[0]), int(c[1])) for c in pairs]
+
+
+def _store_coords(engine, store: str, schema: str):
+    """A store's committed (base version, delta segment count) — the
+    coordinates a view fold catches up to."""
+    m = engine.catalog.get_store(store, schema)
+    return (m.version, m.deltas)
 
 
 def _stats_exprs(df: DataFrame):
@@ -135,23 +184,6 @@ def _observed_stats(df: DataFrame):
     def got():
         row = obs.get
         return int(row["n"]), int(row["fp"])
-
-    return observed, got
-
-
-def _observed_vbs(df: DataFrame):
-    """Attach a collect_set over the ``_vb`` bucket column as an
-    observe metric: the delta's pinning localCheckpoint job also
-    collects the touched buckets, deleting the keyed sinks' separate
-    distinct-collect job (guide §1.2). Returns ``(observed_df,
-    getter)``; call the getter only after the checkpoint job ran."""
-    from pyspark.sql import Observation
-
-    obs = Observation()
-    observed = df.observe(obs, F.collect_set(F.col("_vb")).alias("vbs"))
-
-    def got():
-        return list(obs.get["vbs"])
 
     return observed, got
 
@@ -223,11 +255,9 @@ def _load_keyed_part_log(spark, state_dir: str, ptr: dict, prefix: str,
     tables = ptr.get("tables")
     if not (isinstance(tables, list)
             and all(isinstance(t, str) for t in tables)):
-        raise ValueError(
-            f"keyed {label} state in {state_dir} has no usable part "
-            f"list (pointer 'tables' missing or malformed — tampered, "
-            f"truncated, or written by a different fold); delete the "
-            f"state_dir and re-seed the view instead of reusing it"
+        raise _unusable_pointer(
+            f"keyed {label}", state_dir,
+            "no usable part list (pointer 'tables' missing or malformed)",
         )
     tables = list(tables)
     lost = [t for t in tables
@@ -273,6 +303,130 @@ def _commit_keyed_pointer(ptr_path: str, state_dir: str, payload: dict,
     dead -= set(payload["tables"])
     for t in dead:
         shutil.rmtree(os.path.join(state_dir, t), ignore_errors=True)
+
+
+class _KeyedPartLog:
+    """The view store both keyed sinks share: a LOG of
+    bucket-partitioned parquet delta parts under ``state_dir``, merged
+    keep-last per group on read — the same base+delta shape the engine
+    itself uses for store segments:
+
+    - ``<prefix>seed``: the one-time full aggregate at fold start (the
+      only O(groups) write the fold ever performs);
+    - ``<prefix>p<tag>``: per trigger, EXACTLY the groups that
+      trigger's delta touched, at their new folded values — a group
+      whose count reaches zero is written as an n==0 tombstone that
+      keep-last resolves and ``drain`` filters;
+    - ``<prefix>c<tag>``: compaction — past ``_COMPACT_PARTS`` live
+      parts the merged view is rewritten as one part (amortized
+      O(groups / _COMPACT_PARTS) per trigger) so the union plan and the
+      tombstone debt stay bounded.
+
+    Every part is written ``partitionBy("_vb")`` where ``_vb =
+    pmod(xxhash64(group), buckets)``, so the per-trigger read of
+    current group values is PRUNED to the touched buckets (partition
+    pruning pushes through the union) and then cut to exactly the
+    delta's groups by a broadcast null-safe semi-join — per-trigger
+    cost is O(changes + touched-bucket rows), independent of the
+    view's total group count.
+
+    Crash safety: parts are written with overwrite under a tag the
+    sink picks so that a replayed crashed trigger rewrites only its own
+    orphan; the pointer ``<prefix>state.json`` (live part list + the
+    sink's own fields) swaps atomically after the part lands; orphaned
+    ``<prefix>*`` dirs are swept on load; parts dropped by compaction
+    are GC'd only after the new pointer is live; a bucket-count change
+    is REFUSED on load.
+
+    ``view`` is the unbucketed (group, n, measures...) seed plan; only
+    its schema is analysed (no job runs). Parts are read with it
+    explicitly because an empty partitioned part (legal: an empty
+    replica's seed) has no files to infer a schema from."""
+
+    def __init__(self, spark, state_dir: str, prefix: str, label: str,
+                 view: DataFrame, buckets: int, names):
+        self.spark = spark
+        self.dir = state_dir
+        self.prefix = prefix
+        self.label = label
+        self.buckets = buckets
+        self.names = list(names)
+        self.ptr = os.path.join(state_dir, f"{prefix}state.json")
+        self.view_schema = self._bucketed(view).schema
+        self._write = _keyed_part_writer(spark, state_dir, self.view_schema)
+        self.parts: list = []
+        self.tables: list = []
+
+    def _bucketed(self, df: DataFrame) -> DataFrame:
+        return df.withColumn("_vb", _bucket_col(F.col("group"), self.buckets))
+
+    def _append(self, df: DataFrame, table: str) -> None:
+        self.parts.append(self._write(self._bucketed(df), table))
+        self.tables.append(table)
+
+    def load(self, ptr: dict, saved_buckets) -> None:
+        self.tables, self.parts = _load_keyed_part_log(
+            self.spark, self.dir, ptr, self.prefix, self.view_schema,
+            self.buckets, saved_buckets, self.label,
+        )
+
+    def seed(self, seed: DataFrame, fields: dict) -> None:
+        self._append(seed, f"{self.prefix}seed")
+        # a pointer referencing the seed makes the seed scan a one-time
+        # cost even across a crash before the first trigger commits
+        self.commit(-1, fields)
+
+    def fold(self, delta: DataFrame, tag: str) -> None:
+        from pyspark.sql import Observation
+
+        from ahnlich_spark.operators import ivm as IVM
+
+        # the localCheckpoint that pins the delta for its three
+        # consumers ALSO collects the touched buckets (observe metrics
+        # fire on the checkpoint job) — no separate distinct-collect
+        # job (guide §1.2)
+        obs = Observation()
+        delta = self._bucketed(delta).observe(
+            obs, F.collect_set(F.col("_vb")).alias("vbs")
+        ).localCheckpoint()
+        touched = list(obs.get["vbs"])
+        if not touched:
+            return
+        cur = (
+            _keep_last_merged(self.parts, touched=touched).alias("c")
+            .join(
+                F.broadcast(delta.select("group").alias("k")),
+                F.col("c.group").eqNullSafe(F.col("k.group")),
+                "left_semi",
+            )
+            .drop("_vb")
+        )
+        self._append(IVM.apply_agg_delta(
+            cur, delta.drop("_vb"), self.names, keep_zero=True
+        ), f"{self.prefix}p{tag}")
+
+    def compact(self, tag: str):
+        """Compact past ``_COMPACT_PARTS`` live parts; returns the
+        superseded tables for ``commit``'s ``extra_dead`` — the p-part
+        appended THIS trigger has never been in a pointer, so the
+        commit's old-minus-new diff alone would leak its dir forever."""
+        if len(self.parts) <= _COMPACT_PARTS:
+            return ()
+        pre = set(self.tables)
+        table = f"{self.prefix}c{tag}"
+        compacted = _keep_last_merged(self.parts).filter(F.col("n") > 0)
+        self.parts = [self._write(compacted, table)]
+        self.tables = [table]
+        return pre - {table}
+
+    def commit(self, batch_id: int, fields: dict, extra_dead=()) -> None:
+        _commit_keyed_pointer(self.ptr, self.dir, {
+            "batch_id": batch_id, "tables": list(self.tables), **fields,
+        }, extra_dead=extra_dead)
+
+    def drain(self) -> DataFrame:
+        return (_keep_last_merged(self.parts)
+                .filter(F.col("n") > 0).drop("_vb"))
 
 
 def rebucket_keyed_state(spark, state_dir: str, new_buckets: int) -> dict:
@@ -542,10 +696,12 @@ class _ReplayLedger:
 
 class _DfStatePersist:
     """Parquet-keyed-by-batch-id persistence for DataFrame fold state —
-    the transactional recipe shared by the KMV / HLL / histogram / CMS
-    / drift folds: state for batch N is written with overwrite
-    (idempotent on a crashed write), then a pointer file is atomically
-    replaced; only the current and previous versions are retained.
+    the state store of ``_persisted_fold`` (the KMV / HLL / histogram /
+    CMS / drift folds) and of the snapshot mview sink: state for batch
+    N is written with overwrite (idempotent on a crashed write), then a
+    pointer file is atomically replaced; only the current and previous
+    versions are retained. A pointer that lost ``batch_id`` or
+    ``table`` is refused on load with the re-seed error.
 
     The pointer also carries a ``_ReplayLedger``: per-batch (row count,
     content fingerprint) for a bounded recent window plus cumulative
@@ -553,9 +709,10 @@ class _DfStatePersist:
     source differently — by count, by content (same-sized batches with
     displaced rows), or across the whole replayed prefix. Ledger stats
     ride the trigger's own apply/fold/write job as observe metrics
-    (``_observed_stats``) — no separate aggregation job; only a
-    replayed (skipped) batch pays one explicit ``_batch_stats`` job to
-    verify.
+    (``_observed_stats``) — no separate aggregation job; ``save``
+    resolves them only after its write has materialized every row.
+    Only a replayed (skipped) batch pays one explicit ``_batch_stats``
+    job to verify.
 
     Drain contract (two-commit TTL): frames returned by ``load``/
     ``save`` are LAZY read-backs of the state table; GC retains the
@@ -594,6 +751,7 @@ class _DfStatePersist:
         p = _read_json(self.ptr)
         if p is None:
             return None, -1
+        _require_pointer_keys(p, ("batch_id", "table"), self.name, self.dir)
         self.ledger = _ReplayLedger.from_json(p.get("ledger"))
         if p.get("ledger") is None and isinstance(p.get("rows"), dict):
             # pre-ledger pointer: keep the per-batch count checks its
@@ -608,11 +766,11 @@ class _DfStatePersist:
         return self._reload(p["table"], p.get("schema")), self._loaded_last
 
     def replay_guard(self, batch_df: DataFrame, batch_id: int,
-                     name: str, stats=None) -> None:
+                     name: str) -> None:
         """Called when a batch is about to be skipped as a replay:
         verify it carries exactly the rows that were folded under this
         id, or refuse with a clear recovery instruction."""
-        rows, fp = stats if stats is not None else _batch_stats(batch_df)
+        rows, fp = _batch_stats(batch_df)
         self.ledger.verify(batch_id, self._loaded_last, rows, fp, name)
 
     def save(self, df: DataFrame, batch_id: int, stats,
@@ -678,6 +836,91 @@ class _DfStatePersist:
         p["extra"] = self.extra
         _atomic_write_json(self.ptr, p)
         return True
+
+
+def _start_foreach_batch(stream: DataFrame, sink, checkpoint: Optional[str],
+                         mode: str = "update"):
+    """Start ``stream`` into the foreachBatch ``sink``, resuming from
+    ``checkpoint`` when one is given."""
+    writer = stream.writeStream.foreachBatch(sink).outputMode(mode)
+    if checkpoint:
+        writer = writer.option("checkpointLocation", checkpoint)
+    return writer.start()
+
+
+def _persisted_fold(stream: DataFrame, name: str, summarize, merge,
+                    state_dir: Optional[str], initial: Optional[DataFrame],
+                    empty_msg: str):
+    """The one skeleton of the DataFrame sketch folds (KMV, HLL,
+    histogram, CMS, embedding drift): each trigger folds
+    ``merge(summarize(batch).unionByName(state))`` into the running
+    state, where ``summarize`` turns a micro-batch into a state-shaped
+    frame and ``merge`` re-aggregates a union of such frames. Merges
+    must be order-free, so the result never depends on which side of
+    the union the state sits.
+
+    With ``state_dir`` the state is a ``_DfStatePersist`` named
+    ``name``: a restart reloads it (persisted state wins over
+    ``initial``), a replayed batch is verified against the ledger and
+    skipped, and each new batch is persisted keyed by its id. Without
+    it the state is localCheckpointed per trigger. ``initial`` seeds a
+    warm start. Returns ``(query, drain_state)``; ``drain_state()``
+    raises ``ValueError(empty_msg)`` while there is no state yet."""
+    state = {"df": None, "last_id": -1}
+    persist = (
+        _DfStatePersist(stream.sparkSession, state_dir, name)
+        if state_dir else None
+    )
+    if persist:
+        loaded, last = persist.load()
+        if loaded is not None:
+            state["df"], state["last_id"] = loaded, last
+    if state["df"] is None and initial is not None:
+        # materialize the warm start ONLY when the pointer missed —
+        # persisted state wins, and eagerly checkpointing a seed that
+        # is about to be discarded costs an O(state) job every restart
+        state["df"] = initial.localCheckpoint()
+
+    def _sink(batch_df: DataFrame, batch_id: int) -> None:
+        if persist and batch_id <= state["last_id"]:
+            # replayed batch: already folded into persisted state —
+            # verify it is byte-for-byte the batch we folded
+            persist.replay_guard(batch_df, batch_id, name)
+            return
+        stats = None
+        if persist:
+            # ledger stats ride the fold's own persisting write job as
+            # observe metrics instead of a separate aggregation job;
+            # ``persist.save`` reads them only AFTER that write has
+            # fully materialized the plan (an earlier or partial action
+            # would not have seen every row)
+            batch_df, stats = _observed_stats(batch_df)
+        folded = summarize(batch_df)
+        if state["df"] is not None:
+            # the BATCH-derived frame is the union receiver on purpose:
+            # inside foreachBatch the batch belongs to the streaming
+            # query's CLONED session, and the observed ledger metrics
+            # only deliver when the fold's action executes under that
+            # session — a state-receiver union would re-root the plan
+            # on the main session and obs.get would wait forever. The
+            # merge is order-free, so the receiver cannot change the
+            # folded state.
+            folded = merge(folded.unionByName(state["df"]))
+        state["last_id"] = batch_id
+        if persist:
+            # the persisting write is the trigger's one materialization;
+            # the returned lazy read-back replaces a localCheckpoint job
+            state["df"] = persist.save(folded, batch_id, stats)
+        else:
+            state["df"] = folded.localCheckpoint()
+
+    def drain_state() -> DataFrame:
+        if state["df"] is None:
+            raise ValueError(empty_msg)
+        return state["df"]
+
+    return _start_foreach_batch(stream, _sink, None), drain_state
+
 
 # streaming_incremental_dedup: compact the lazily-unioned state parts
 # once the list (and thus the union plan) grows past this many pieces
@@ -876,10 +1119,7 @@ def streaming_set_ingest(stream: DataFrame, engine, store: str, schema: str = "p
             return
         engine.set(store, batch_df, schema=schema)
 
-    writer = stream.writeStream.foreachBatch(_sink).outputMode("update")
-    if checkpoint:
-        writer = writer.option("checkpointLocation", checkpoint)
-    return writer.start()
+    return _start_foreach_batch(stream, _sink, checkpoint)
 
 
 def streaming_probe_search(
@@ -922,10 +1162,7 @@ def streaming_probe_search(
             os.path.join(sink_path, f"b{batch_id}")
         )
 
-    writer = stream.writeStream.foreachBatch(_answer).outputMode("update")
-    if checkpoint:
-        writer = writer.option("checkpointLocation", checkpoint)
-    return writer.start()
+    return _start_foreach_batch(stream, _answer, checkpoint)
 
 
 def store_changes_stream(
@@ -1024,10 +1261,28 @@ def streaming_apply_changes(
             return
         engine.apply_changes(store, batch_df, schema=schema)
 
-    writer = feed.writeStream.foreachBatch(_sink).outputMode("append")
-    if checkpoint:
-        writer = writer.option("checkpointLocation", checkpoint)
-    return writer.start()
+    return _start_foreach_batch(feed, _sink, checkpoint, "append")
+
+
+def _keyed_view_sink(fn: str, sink: str, state_dir: Optional[str],
+                     checkpoint: Optional[str]) -> bool:
+    """Validate a view fold's sink options; True selects the keyed
+    sink."""
+    if sink not in ("snapshot", "keyed"):
+        raise ValueError(f"unknown sink {sink!r}: snapshot | keyed")
+    if sink == "keyed" and not state_dir:
+        raise ValueError(
+            "sink='keyed' stores the view as parquet delta parts "
+            "and needs state_dir to put them somewhere durable"
+        )
+    if checkpoint and not state_dir:
+        raise ValueError(
+            f"{fn} without state_dir keeps the view and its fold "
+            f"coordinates in driver memory; a checkpointLocation would "
+            f"skip committed batches on restart while both reset. Pass "
+            f"state_dir to make the fold checkpoint-safe."
+        )
+    return sink == "keyed"
 
 
 def streaming_materialized_agg(
@@ -1088,49 +1343,29 @@ def streaming_materialized_agg(
       writes 1k rows, never the view."""
     from ahnlich_spark.operators import ivm as IVM
 
-    if sink not in ("snapshot", "keyed"):
-        raise ValueError(f"unknown sink {sink!r}: snapshot | keyed")
-    if sink == "keyed":
-        if not state_dir:
-            raise ValueError(
-                "sink='keyed' stores the view as parquet delta parts "
-                "and needs state_dir to put them somewhere durable"
-            )
+    if _keyed_view_sink("streaming_materialized_agg", sink, state_dir,
+                        checkpoint):
         return _keyed_materialized_agg(
             feed, engine, store, group_expr, measures,
             schema, checkpoint, state_dir, buckets,
         )
-    spark = engine.spark
     persist = (
-        _DfStatePersist(spark, state_dir, "mview") if state_dir else None
+        _DfStatePersist(engine.spark, state_dir, "mview")
+        if state_dir else None
     )
-    if checkpoint and not state_dir:
-        raise ValueError(
-            "streaming_materialized_agg without state_dir keeps the view "
-            "and its fold coordinates in driver memory; a "
-            "checkpointLocation would skip committed batches on restart "
-            "while both reset. Pass state_dir to make the fold "
-            "checkpoint-safe."
-        )
-    m0 = engine.catalog.get_store(store, schema)
-    state = {"agg": None, "coords": (m0.version, m0.deltas), "last_id": -1}
+    state = {"agg": None, "coords": _store_coords(engine, store, schema),
+             "last_id": -1}
     if persist:
         loaded, last = persist.load()
         if loaded is not None:
-            coords = persist.extra.get("coords")
-            if not (isinstance(coords, (list, tuple)) and len(coords) == 2):
-                raise ValueError(
-                    f"mview fold state in {state_dir} has no usable fold "
-                    f"coordinates (pointer 'extra.coords' missing or "
-                    f"malformed — tampered, truncated, or written by a "
-                    f"different fold); delete the state_dir and re-seed "
-                    f"the view instead of reusing it"
-                )
+            state["coords"] = _pointer_coords(
+                "mview", state_dir, "'extra.coords'",
+                persist.extra.get("coords"),
+            )[0]
             state["agg"], state["last_id"] = loaded, last
-            state["coords"] = (int(coords[0]), int(coords[1]))
     if state["agg"] is None:
         # seed pinned to the SAME coordinates recorded for the first
-        # fold — a writer committing between get_store() and the first
+        # fold — a writer committing between _store_coords() and the first
         # materialization would otherwise land in the seed AND in the
         # first cdf delta (double-counted forever); the keyed sink
         # pins identically. With a persister the seed stays LAZY: the
@@ -1156,9 +1391,8 @@ def streaming_materialized_agg(
         # ride that job — the separate _batch_stats aggregation and the
         # isEmpty probe are both gone (guide §1.2: fewer passes)
         engine.apply_changes(store, batch_df, schema=schema)
-        m = engine.catalog.get_store(store, schema)
         v0, s0 = state["coords"]
-        v1, s1 = m.version, m.deltas
+        v1, s1 = _store_coords(engine, store, schema)
         changed = (v1, s1) != (v0, s0)
         if changed:
             delta = IVM.cdf_agg_delta(
@@ -1190,10 +1424,22 @@ def streaming_materialized_agg(
     def drain() -> DataFrame:
         return state["agg"]
 
-    writer = feed.writeStream.foreachBatch(_sink).outputMode("update")
-    if checkpoint:
-        writer = writer.option("checkpointLocation", checkpoint)
-    return writer.start(), drain
+    return _start_foreach_batch(feed, _sink, checkpoint), drain
+
+
+def _distinct_drain(drain_pairs):
+    """The drain of a (group, value) pair-multiset view: ``drain()`` is
+    the (group, n, n_distinct) rollup, ``drain(quantile=(num, den))``
+    the exact discrete quantile (group, n, q)."""
+    from ahnlich_spark.operators import ivm as IVM
+
+    def drain(quantile: Optional[tuple] = None) -> DataFrame:
+        inner = drain_pairs()
+        if quantile is not None:
+            return IVM.quantile_rollup(inner, *quantile)
+        return IVM.distinct_rollup(inner)
+
+    return drain
 
 
 def streaming_materialized_distinct(
@@ -1238,15 +1484,7 @@ def streaming_materialized_distinct(
         sink=sink, buckets=buckets,
     )
 
-    def drain(quantile: Optional[tuple] = None) -> DataFrame:
-        from ahnlich_spark.operators import ivm as IVM
-
-        inner = drain_pairs()
-        if quantile is not None:
-            return IVM.quantile_rollup(inner, *quantile)
-        return IVM.distinct_rollup(inner)
-
-    return q, drain
+    return q, _distinct_drain(drain_pairs)
 
 
 def streaming_materialized_join(
@@ -1306,14 +1544,8 @@ def streaming_materialized_join(
       parts — it folds to NEW coordinates and writes a NEW part."""
     from ahnlich_spark.operators import ivm as IVM
 
-    if sink not in ("snapshot", "keyed"):
-        raise ValueError(f"unknown sink {sink!r}: snapshot | keyed")
-    if sink == "keyed":
-        if not state_dir:
-            raise ValueError(
-                "sink='keyed' stores the view as parquet delta parts "
-                "and needs state_dir to put them somewhere durable"
-            )
+    if _keyed_view_sink("streaming_materialized_join", sink, state_dir,
+                        checkpoint):
         return _keyed_materialized_join(
             feed, eng_a, store_a, eng_b, store_b, join_a, join_b,
             group_expr, measures, schema, checkpoint, state_dir,
@@ -1321,38 +1553,20 @@ def streaming_materialized_join(
         )
     spark = eng_a.spark
     names = list(measures)
-    if checkpoint and not state_dir:
-        raise ValueError(
-            "streaming_materialized_join without state_dir keeps the "
-            "view and its fold coordinates in driver memory; a "
-            "checkpointLocation would skip committed batches on restart "
-            "while both reset. Pass state_dir to make the fold "
-            "checkpoint-safe."
-        )
-
-    def _coords(eng, store):
-        m = eng.catalog.get_store(store, schema)
-        return (m.version, m.deltas)
-
-    ca = tuple(from_a) if from_a is not None else _coords(eng_a, store_a)
-    cb = tuple(from_b) if from_b is not None else _coords(eng_b, store_b)
+    ca = (tuple(from_a) if from_a is not None
+          else _store_coords(eng_a, store_a, schema))
+    cb = (tuple(from_b) if from_b is not None
+          else _store_coords(eng_b, store_b, schema))
     state = {"agg": None, "ca": ca, "cb": cb}
     ptr_path = os.path.join(state_dir, "mjoin_state.json") if state_dir else None
     if ptr_path:
         p = _read_json(ptr_path)
         if p is not None:
-            pa, pb = p.get("coords_a"), p.get("coords_b")
-            if not all(isinstance(c, (list, tuple)) and len(c) == 2
-                       for c in (pa, pb)):
-                raise ValueError(
-                    f"mjoin fold state in {state_dir} has no usable fold "
-                    f"coordinates (pointer coords_a/coords_b missing or "
-                    f"malformed — tampered, truncated, or written by a "
-                    f"different fold); delete the state_dir and re-seed "
-                    f"the view instead of reusing it"
-                )
-            state["ca"] = (int(pa[0]), int(pa[1]))
-            state["cb"] = (int(pb[0]), int(pb[1]))
+            state["ca"], state["cb"] = _pointer_coords(
+                "mjoin", state_dir, "coords_a/coords_b",
+                p.get("coords_a"), p.get("coords_b"),
+            )
+            _require_pointer_keys(p, ("table",), "mjoin", state_dir)
             # lazy, schema-pinned when recorded: GC retains the current
             # and previous tables, so the frame stays readable until
             # two commits from now (state points elsewhere by then)
@@ -1412,7 +1626,8 @@ def streaming_materialized_join(
         ).parquet(os.path.join(state_dir, table))
 
     def _sink(batch_df: DataFrame, batch_id: int) -> None:
-        ta, tb = _coords(eng_a, store_a), _coords(eng_b, store_b)
+        ta = _store_coords(eng_a, store_a, schema)
+        tb = _store_coords(eng_b, store_b, schema)
         if (ta, tb) != (state["ca"], state["cb"]):
             delta = IVM.cdf_join_agg_delta(
                 eng_a, store_a, state["ca"], eng_b, store_b, state["cb"],
@@ -1429,10 +1644,7 @@ def streaming_materialized_join(
     def drain() -> DataFrame:
         return state["agg"]
 
-    writer = feed.writeStream.foreachBatch(_sink).outputMode("update")
-    if checkpoint:
-        writer = writer.option("checkpointLocation", checkpoint)
-    return writer.start(), drain
+    return _start_foreach_batch(feed, _sink, checkpoint), drain
 
 
 def _keyed_materialized_agg(
@@ -1447,112 +1659,51 @@ def _keyed_materialized_agg(
     buckets: int,
 ):
     """The high-cardinality sink behind
-    ``streaming_materialized_agg(sink="keyed")``.
+    ``streaming_materialized_agg(sink="keyed")``: the view is a
+    ``_KeyedPartLog`` of ``mviewk_*`` parts, each trigger's delta folded
+    into exactly the groups it touched.
 
-    The view is a LOG of bucket-partitioned parquet delta parts, merged
-    keep-last per group on read — the same base+delta shape the engine
-    itself uses for store segments:
-
-    - ``mviewk_seed``: the one-time full aggregate of the replica at
-      fold start (the only O(groups) write the fold ever performs);
-    - ``mviewk_p<batch>``: per trigger, EXACTLY the groups that
-      trigger's delta touched, at their new folded values — a group
-      whose count reaches zero is written as an n==0 tombstone that
-      keep-last resolves and ``drain`` filters;
-    - ``mviewk_c<batch>``: compaction — past ``_COMPACT_PARTS`` live
-      parts the merged view is rewritten as one part (amortized
-      O(groups / _COMPACT_PARTS) per trigger) so the union plan and the
-      tombstone debt stay bounded.
-
-    Every part is written ``partitionBy("_vb")`` where ``_vb =
-    pmod(xxhash64(group), buckets)``, so the per-trigger read of
-    current group values is PRUNED to the touched buckets (partition
-    pruning pushes through the union) and then cut to exactly the
-    delta's groups by a broadcast null-safe semi-join — per-trigger
-    cost is O(changes + touched-bucket rows), independent of the
-    view's total group count.
-
-    Crash safety is the standard recipe: parts are batch-id-named and
-    written with overwrite (a replayed crashed trigger rewrites its own
-    orphan), the pointer (live part list + fold coords + replay ledger)
-    swaps atomically after the part lands, orphaned ``mviewk_*`` dirs
-    are swept on load, and parts dropped by compaction are GC'd only
-    after the new pointer is live. Kill-and-restart equals the
-    uninterrupted run (pytest-pinned alongside the snapshot sink)."""
+    Parts are named by batch id: a replayed crashed trigger rewrites
+    its own orphan, and the replay ledger (riding the pointer with the
+    fold coords) skips batches already folded. Kill-and-restart equals
+    the uninterrupted run (pytest-pinned alongside the snapshot
+    sink)."""
     from ahnlich_spark.operators import ivm as IVM
 
-    spark = engine.spark
-    names = list(measures)
-    ptr_path = os.path.join(state_dir, "mviewk_state.json")
-
-    def _vb(col):
-        return _bucket_col(col, buckets)
-
-    # the view schema comes from PLAN ANALYSIS of the seed aggregate
-    # (no job runs) — parts are read with it explicitly because an
-    # empty partitioned part (legal: an empty replica's seed) has no
-    # files to infer a schema from
-    view_schema = (
-        IVM.full_agg(engine, store, group_expr, measures, schema=schema)
-        .withColumn("_vb", _vb(F.col("group"))).schema
+    log = _KeyedPartLog(
+        engine.spark, state_dir, "mviewk_", "mview",
+        IVM.full_agg(engine, store, group_expr, measures, schema=schema),
+        buckets, measures,
     )
-
-    _write_part = _keyed_part_writer(spark, state_dir, view_schema)
-    _merged = _keep_last_merged
-
-    state = {"parts": [], "tables": [], "coords": None, "last_id": -1}
+    state = {"coords": None, "last_id": -1}
     ledger = _ReplayLedger()
     loaded_last = -1
-    p = _read_json(ptr_path)
-    if p is not None:
-        coords = (p.get("extra") or {}).get("coords")
-        if not (isinstance(coords, (list, tuple)) and len(coords) == 2):
-            raise ValueError(
-                f"keyed mview fold state in {state_dir} has no usable "
-                f"fold coordinates (pointer 'extra.coords' missing or "
-                f"malformed — tampered, truncated, or written by a "
-                f"different fold); delete the state_dir and re-seed "
-                f"the view instead of reusing it"
-            )
-        state["coords"] = (int(coords[0]), int(coords[1]))
-        state["tables"], state["parts"] = _load_keyed_part_log(
-            spark, state_dir, p, "mviewk_", view_schema, buckets,
-            (p.get("extra") or {}).get("buckets"), "mview",
-        )
-        state["last_id"] = loaded_last = int(p["batch_id"])
-        ledger = _ReplayLedger.from_json(p.get("ledger"))
-    else:
-        m0 = engine.catalog.get_store(store, schema)
-        state["coords"] = (m0.version, m0.deltas)
-        seed = IVM.full_agg(
-            engine, store, group_expr, measures,
-            version=m0.version, segments=m0.deltas, schema=schema,
-        ).withColumn("_vb", _vb(F.col("group")))
-        state["parts"] = [_write_part(seed, "mviewk_seed")]
-        state["tables"] = ["mviewk_seed"]
 
-    def _commit(batch_id: int, stats, extra_dead=()) -> None:
-        if stats is not None:
-            # observed getter: the trigger's apply/validate job has run
-            # by commit time, so the metrics are available
-            if callable(stats):
-                stats = stats()
-            ledger.record(batch_id, *stats)
-        _commit_keyed_pointer(ptr_path, state_dir, {
-            "batch_id": batch_id,
-            "tables": list(state["tables"]),
+    def _fields() -> dict:
+        return {
             "ledger": ledger.as_json(),
             # buckets rides the pointer so a restart with a different
             # bucket count is REFUSED on load instead of silently
             # merging parts under a mismatched _vb mapping
-            "extra": {"coords": list(state["coords"]),
-                      "buckets": buckets},
-        }, extra_dead=extra_dead)
+            "extra": {"coords": list(state["coords"]), "buckets": buckets},
+        }
 
-    if p is None:
-        # a pointer referencing the seed makes the seed scan a one-time
-        # cost even across a crash before the first trigger commits
-        _commit(-1, None)
+    p = _read_json(log.ptr)
+    if p is not None:
+        state["coords"] = _pointer_coords(
+            "keyed mview", state_dir, "'extra.coords'",
+            (p.get("extra") or {}).get("coords"),
+        )[0]
+        _require_pointer_keys(p, ("batch_id",), "keyed mview", state_dir)
+        log.load(p, (p.get("extra") or {}).get("buckets"))
+        state["last_id"] = loaded_last = int(p["batch_id"])
+        ledger = _ReplayLedger.from_json(p.get("ledger"))
+    else:
+        v0, s0 = state["coords"] = _store_coords(engine, store, schema)
+        log.seed(IVM.full_agg(
+            engine, store, group_expr, measures,
+            version=v0, segments=s0, schema=schema,
+        ), _fields())
 
     def _sink(batch_df: DataFrame, batch_id: int) -> None:
         if batch_id <= state["last_id"]:
@@ -1565,58 +1716,21 @@ def _keyed_materialized_agg(
         # job and no-ops an empty one — the observed ledger stats ride
         # that job instead of a separate _batch_stats pass (§1.2)
         engine.apply_changes(store, batch_df, schema=schema)
-        m = engine.catalog.get_store(store, schema)
         v0, s0 = state["coords"]
-        v1, s1 = m.version, m.deltas
+        v1, s1 = _store_coords(engine, store, schema)
         if (v1, s1) != (v0, s0):
-            delta, touched_of = _observed_vbs(IVM.cdf_agg_delta(
+            log.fold(IVM.cdf_agg_delta(
                 engine, store, v0, s0, group_expr, measures,
                 to_version=v1, to_segments=s1, schema=schema,
-            ).withColumn("_vb", _vb(F.col("group"))))
-            # the localCheckpoint that pins the delta for its three
-            # consumers ALSO collects the touched buckets (observe
-            # metrics fire on the checkpoint job) — the separate
-            # distinct-collect job is gone (§1.2)
-            delta = delta.localCheckpoint()
-            touched = touched_of()
-            if touched:
-                cur = (
-                    _merged(state["parts"], touched=touched).alias("c")
-                    .join(
-                        F.broadcast(delta.select("group").alias("k")),
-                        F.col("c.group").eqNullSafe(F.col("k.group")),
-                        "left_semi",
-                    )
-                    .drop("_vb")
-                )
-                folded = IVM.apply_agg_delta(
-                    cur, delta.drop("_vb"), names, keep_zero=True
-                ).withColumn("_vb", _vb(F.col("group")))
-                table = f"mviewk_p{batch_id}"
-                state["parts"].append(_write_part(folded, table))
-                state["tables"].append(table)
+            ), str(batch_id))
         state["coords"] = (v1, s1)
-        dropped = ()
-        if len(state["parts"]) > _COMPACT_PARTS:
-            # remember what compaction supersedes: the p-part appended
-            # THIS trigger has never been in a pointer, so the commit's
-            # old-minus-new diff alone would leak its dir forever
-            pre = list(state["tables"])
-            compacted = _merged(state["parts"]).filter(F.col("n") > 0)
-            table = f"mviewk_c{batch_id}"
-            state["parts"] = [_write_part(compacted, table)]
-            state["tables"] = [table]
-            dropped = set(pre) - set(state["tables"])
+        dropped = log.compact(str(batch_id))
         state["last_id"] = batch_id
-        _commit(batch_id, stats, extra_dead=dropped)
+        # the apply/validate job has run, so the observed stats are in
+        ledger.record(batch_id, *stats())
+        log.commit(batch_id, _fields(), extra_dead=dropped)
 
-    def drain() -> DataFrame:
-        return _merged(state["parts"]).filter(F.col("n") > 0).drop("_vb")
-
-    writer = feed.writeStream.foreachBatch(_sink).outputMode("update")
-    if checkpoint:
-        writer = writer.option("checkpointLocation", checkpoint)
-    return writer.start(), drain
+    return _start_foreach_batch(feed, _sink, checkpoint), log.drain
 
 
 def _keyed_materialized_join(
@@ -1637,13 +1751,13 @@ def _keyed_materialized_join(
     from_b,
 ):
     """The high-cardinality sink behind
-    ``streaming_materialized_join(sink="keyed")`` — the keyed part-log
-    of ``_keyed_materialized_agg`` composed with the doorbell join
-    fold. Per trigger: ONE bilinear delta (each term a broadcast-probed
-    base scan), the merge/write touching EXACTLY the delta's groups,
-    reads pruned to touched ``pmod(xxhash64(group), buckets)``
-    partitions — O(changes on both sides + touched-bucket rows),
-    independent of the view's total group count.
+    ``streaming_materialized_join(sink="keyed")`` — the
+    ``_KeyedPartLog`` of ``_keyed_materialized_agg`` (``mjoink_*``
+    parts) composed with the doorbell join fold. Per trigger: ONE
+    bilinear delta (each term a broadcast-probed base scan), the
+    merge/write touching EXACTLY the delta's groups — O(changes on both
+    sides + touched-bucket rows), independent of the view's total group
+    count.
 
     Two deliberate departures from the single-store keyed sink:
 
@@ -1658,135 +1772,57 @@ def _keyed_materialized_join(
       folds to new coordinates and writes a NEW part, while a re-run
       of a crashed fold overwrites only its own orphan. Batch-id
       naming would overwrite committed live parts in place (the same
-      hazard the snapshot join sink's _commit documents).
-
-    Crash safety otherwise standard: overwrite-mode parts, atomic
-    pointer swap after the part lands, orphaned ``mjoink_*`` dirs swept
-    on load, compaction GC'd only after the new pointer is live, a
-    bucket-count change REFUSED on load."""
+      hazard the snapshot join sink's _commit documents)."""
     from ahnlich_spark.operators import ivm as IVM
 
-    spark = eng_a.spark
-    names = list(measures)
-    ptr_path = os.path.join(state_dir, "mjoink_state.json")
-
-    def _vb(col):
-        return _bucket_col(col, buckets)
-
-    # schema from PLAN ANALYSIS of the seed aggregate (no job runs):
-    # empty partitioned parts are legal and have no files to infer from
-    view_schema = (
+    log = _KeyedPartLog(
+        eng_a.spark, state_dir, "mjoink_", "mjoin",
         IVM.full_join_agg(
             eng_a, store_a, eng_b, store_b, join_a, join_b,
             group_expr, measures, schema=schema,
-        ).withColumn("_vb", _vb(F.col("group"))).schema
+        ),
+        buckets, measures,
     )
+    state = {"ca": None, "cb": None}
 
-    _write_part = _keyed_part_writer(spark, state_dir, view_schema)
+    def _fields() -> dict:
+        return {"coords_a": list(state["ca"]), "coords_b": list(state["cb"]),
+                "buckets": buckets}
 
-    def _coords(eng, store):
-        m = eng.catalog.get_store(store, schema)
-        return (m.version, m.deltas)
-
-    state = {"parts": [], "tables": [], "ca": None, "cb": None}
-    p = _read_json(ptr_path)
+    p = _read_json(log.ptr)
     if p is not None:
-        pa, pb = p.get("coords_a"), p.get("coords_b")
-        if not all(isinstance(c, (list, tuple)) and len(c) == 2
-                   for c in (pa, pb)):
-            raise ValueError(
-                f"keyed mjoin fold state in {state_dir} has no usable "
-                f"fold coordinates (pointer coords_a/coords_b missing "
-                f"or malformed — tampered, truncated, or written by a "
-                f"different fold); delete the state_dir and re-seed "
-                f"the view instead of reusing it"
-            )
-        state["ca"] = (int(pa[0]), int(pa[1]))
-        state["cb"] = (int(pb[0]), int(pb[1]))
-        state["tables"], state["parts"] = _load_keyed_part_log(
-            spark, state_dir, p, "mjoink_", view_schema, buckets,
-            p.get("buckets"), "mjoin",
+        state["ca"], state["cb"] = _pointer_coords(
+            "keyed mjoin", state_dir, "coords_a/coords_b",
+            p.get("coords_a"), p.get("coords_b"),
         )
+        log.load(p, p.get("buckets"))
     else:
-        ca = tuple(from_a) if from_a is not None else _coords(eng_a, store_a)
-        cb = tuple(from_b) if from_b is not None else _coords(eng_b, store_b)
-        state["ca"], state["cb"] = ca, cb
-        seed = IVM.full_join_agg(
+        ca = state["ca"] = (tuple(from_a) if from_a is not None
+                            else _store_coords(eng_a, store_a, schema))
+        cb = state["cb"] = (tuple(from_b) if from_b is not None
+                            else _store_coords(eng_b, store_b, schema))
+        log.seed(IVM.full_join_agg(
             eng_a, store_a, eng_b, store_b, join_a, join_b,
             group_expr, measures,
             version_a=ca[0], segments_a=ca[1],
             version_b=cb[0], segments_b=cb[1], schema=schema,
-        ).withColumn("_vb", _vb(F.col("group")))
-        state["parts"] = [_write_part(seed, "mjoink_seed")]
-        state["tables"] = ["mjoink_seed"]
-
-    def _commit(batch_id: int, extra_dead=()) -> None:
-        _commit_keyed_pointer(ptr_path, state_dir, {
-            "batch_id": batch_id,
-            "tables": list(state["tables"]),
-            "coords_a": list(state["ca"]),
-            "coords_b": list(state["cb"]),
-            "buckets": buckets,
-        }, extra_dead=extra_dead)
-
-    if p is None:
-        # pointer referencing the seed makes the seed scan one-time
-        # even across a crash before the first trigger commits
-        _commit(-1)
+        ), _fields())
 
     def _sink(batch_df: DataFrame, batch_id: int) -> None:
-        ta, tb = _coords(eng_a, store_a), _coords(eng_b, store_b)
+        ta = _store_coords(eng_a, store_a, schema)
+        tb = _store_coords(eng_b, store_b, schema)
         if (ta, tb) == (state["ca"], state["cb"]):
             return  # coordinate no-op: zero jobs, zero writes
-        delta, touched_of = _observed_vbs(IVM.cdf_join_agg_delta(
+        tag = f"{ta[0]}_{ta[1]}_{tb[0]}_{tb[1]}"
+        log.fold(IVM.cdf_join_agg_delta(
             eng_a, store_a, state["ca"], eng_b, store_b, state["cb"],
             join_a, join_b, group_expr, measures,
             to_a=ta, to_b=tb, schema=schema,
-        ).withColumn("_vb", _vb(F.col("group"))))
-        # the pinning localCheckpoint job also collects the touched
-        # buckets (observe metrics) — no separate distinct-collect job
-        delta = delta.localCheckpoint()
-        touched = touched_of()
-        if touched:
-            cur = (
-                _keep_last_merged(state["parts"], touched=touched)
-                .alias("c")
-                .join(
-                    F.broadcast(delta.select("group").alias("k")),
-                    F.col("c.group").eqNullSafe(F.col("k.group")),
-                    "left_semi",
-                )
-                .drop("_vb")
-            )
-            folded = IVM.apply_agg_delta(
-                cur, delta.drop("_vb"), names, keep_zero=True
-            ).withColumn("_vb", _vb(F.col("group")))
-            table = f"mjoink_p{ta[0]}_{ta[1]}_{tb[0]}_{tb[1]}"
-            state["parts"].append(_write_part(folded, table))
-            state["tables"].append(table)
+        ), tag)
         state["ca"], state["cb"] = ta, tb
-        dropped = ()
-        if len(state["parts"]) > _COMPACT_PARTS:
-            # the p-part written THIS trigger has never reached a
-            # pointer — remember it or the commit's old-minus-new GC
-            # leaks its dir (one per compaction, process-lifetime)
-            pre = list(state["tables"])
-            compacted = _keep_last_merged(state["parts"]) \
-                .filter(F.col("n") > 0)
-            table = f"mjoink_c{ta[0]}_{ta[1]}_{tb[0]}_{tb[1]}"
-            state["parts"] = [_write_part(compacted, table)]
-            state["tables"] = [table]
-            dropped = set(pre) - set(state["tables"])
-        _commit(batch_id, extra_dead=dropped)
+        log.commit(batch_id, _fields(), extra_dead=log.compact(tag))
 
-    def drain() -> DataFrame:
-        return (_keep_last_merged(state["parts"])
-                .filter(F.col("n") > 0).drop("_vb"))
-
-    writer = feed.writeStream.foreachBatch(_sink).outputMode("update")
-    if checkpoint:
-        writer = writer.option("checkpointLocation", checkpoint)
-    return writer.start(), drain
+    return _start_foreach_batch(feed, _sink, checkpoint), log.drain
 
 
 def streaming_materialized_join_distinct(
@@ -1829,15 +1865,7 @@ def streaming_materialized_join_distinct(
         sink=sink, buckets=buckets,
     )
 
-    def drain(quantile: Optional[tuple] = None) -> DataFrame:
-        from ahnlich_spark.operators import ivm as IVM
-
-        inner = drain_pairs()
-        if quantile is not None:
-            return IVM.quantile_rollup(inner, *quantile)
-        return IVM.distinct_rollup(inner)
-
-    return q, drain
+    return q, _distinct_drain(drain_pairs)
 
 
 def streaming_incremental_dedup(
@@ -1960,6 +1988,7 @@ def streaming_incremental_dedup(
         os.makedirs(state_dir, exist_ok=True)
         p = _read_json(ptr_path)
         if p is not None:
+            _require_pointer_keys(p, ("batch_id",), "sincr", state_dir)
             for k in ptr_tables:
                 ptr_tables[k] = list(p.get(k, []))
                 state[k] = [
@@ -2080,10 +2109,7 @@ def streaming_incremental_dedup(
             return spark.createDataFrame([], pairs_schema)
         return _union(state["pairs_parts"])
 
-    writer = doc_stream.writeStream.foreachBatch(_sink).outputMode("update")
-    if checkpoint:
-        writer = writer.option("checkpointLocation", checkpoint)
-    return writer.start(), drain
+    return _start_foreach_batch(doc_stream, _sink, checkpoint), drain
 
 
 def streaming_kmv_distinct(
@@ -2128,65 +2154,23 @@ def streaming_kmv_distinct(
     from ahnlich_spark.operators import sketches as SK
 
     group_cols = list(group_cols)
-    spark = value_stream.sparkSession
-    state = {"minima": None, "last_id": -1}
-    persist = (
-        _DfStatePersist(spark, state_dir, "kmv") if state_dir else None
-    )
-    if persist:
-        loaded, last = persist.load()
-        if loaded is not None:
-            state["minima"], state["last_id"] = loaded, last
-    if state["minima"] is None and initial_minima is not None:
-        # materialize the warm start ONLY when the pointer missed —
-        # the persisted state wins, and eagerly checkpointing a seed
-        # that is about to be discarded costs a full O(state) job on
-        # every restart
-        state["minima"] = initial_minima.localCheckpoint()
 
-    def _sink(batch_df: DataFrame, batch_id: int) -> None:
-        if persist and batch_id <= state["last_id"]:
-            # replayed batch: already folded into persisted state —
-            # verify it is byte-for-byte the batch we folded
-            persist.replay_guard(batch_df, batch_id, "kmv")
-            return
-        stats = None
-        if persist:
-            # ledger stats ride the fold's own persisting write job
-            # (observe metrics) instead of a separate aggregation job
-            batch_df, stats = _observed_stats(batch_df)
+    def summarize(batch_df: DataFrame) -> DataFrame:
         bh = batch_df.filter(F.col(value_col).isNotNull()).select(
             *group_cols, SK.kmv_hash(F.col(value_col)).alias("_h")
         )
-        bm = SK.kmv_minima(bh, group_cols, k, n_salts)
-        if state["minima"] is not None:
-            # the BATCH-derived frame is the union receiver on purpose:
-            # inside foreachBatch the batch belongs to the streaming
-            # query's CLONED session, and the observed ledger metrics
-            # only deliver when the fold's action executes under that
-            # session — a state-receiver union would re-root the plan
-            # on the main session and obs.get would wait forever.
-            # KMV merge is order-free (identical (group, _h) rows),
-            # so the swap cannot change the folded state.
-            bm = bm.unionByName(state["minima"])
-            bm = SK.kmv_minima(bm, group_cols, k, n_salts)
-        state["last_id"] = batch_id
-        if persist:
-            # the persisting write is the trigger's one materialization;
-            # the returned lazy read-back replaces a localCheckpoint job
-            state["minima"] = persist.save(bm, batch_id, stats)
-        else:
-            state["minima"] = bm.localCheckpoint()
+        return SK.kmv_minima(bh, group_cols, k, n_salts)
 
-    def drain_minima() -> DataFrame:
-        if state["minima"] is None:
-            raise ValueError("no batch processed and no initial_minima seeded")
-        return state["minima"]
+    q, drain_minima = _persisted_fold(
+        value_stream, "kmv", summarize,
+        lambda u: SK.kmv_minima(u, group_cols, k, n_salts),
+        state_dir, initial_minima,
+        "no batch processed and no initial_minima seeded",
+    )
 
     def drain() -> DataFrame:
         return SK.kmv_estimate(drain_minima(), group_cols, k)
 
-    q = value_stream.writeStream.foreachBatch(_sink).outputMode("update").start()
     return q, drain, drain_minima
 
 
@@ -2220,55 +2204,18 @@ def streaming_hll_distinct(
     from ahnlich_spark.operators import sketches as SK
 
     group_cols = list(group_cols)
-    state = {"registers": None, "last_id": -1}
-    persist = (
-        _DfStatePersist(value_stream.sparkSession, state_dir, "hll")
-        if state_dir else None
+    q, drain_registers = _persisted_fold(
+        value_stream, "hll",
+        lambda b: SK.hll_registers(b, value_col, group_cols, m),
+        lambda u: u.groupBy(*group_cols, "bucket")
+        .agg(F.max("r").alias("r")),
+        state_dir, initial_registers,
+        "no batch processed and no initial_registers seeded",
     )
-    if persist:
-        loaded, last = persist.load()
-        if loaded is not None:
-            state["registers"], state["last_id"] = loaded, last
-    if state["registers"] is None and initial_registers is not None:
-        # materialize the warm start ONLY when the pointer missed —
-        # persisted state wins, and eagerly checkpointing a seed that
-        # is about to be discarded costs an O(state) job every restart
-        state["registers"] = initial_registers.localCheckpoint()
-
-    def _sink(batch_df: DataFrame, batch_id: int) -> None:
-        if persist and batch_id <= state["last_id"]:
-            persist.replay_guard(batch_df, batch_id, "hll")
-            return
-        stats = None
-        if persist:
-            # ledger stats ride the persisting write job (observe)
-            batch_df, stats = _observed_stats(batch_df)
-        br = SK.hll_registers(batch_df, value_col, group_cols, m)
-        if state["registers"] is not None:
-            # batch frame as union receiver: keeps the fold's action on
-            # the foreachBatch clone session so the observed ledger
-            # metrics deliver (see the KMV fold); max-merge is
-            # order-free, so the swap cannot change the state
-            br = (
-                br.unionByName(state["registers"])
-                .groupBy(*group_cols, "bucket")
-                .agg(F.max("r").alias("r"))
-            )
-        state["last_id"] = batch_id
-        if persist:
-            state["registers"] = persist.save(br, batch_id, stats)
-        else:
-            state["registers"] = br.localCheckpoint()
-
-    def drain_registers() -> DataFrame:
-        if state["registers"] is None:
-            raise ValueError("no batch processed and no initial_registers seeded")
-        return state["registers"]
 
     def drain() -> DataFrame:
         return SK.hll_estimate(drain_registers(), group_cols, m)
 
-    q = value_stream.writeStream.foreachBatch(_sink).outputMode("update").start()
     return q, drain, drain_registers
 
 
@@ -2302,54 +2249,18 @@ def streaming_histogram_quantiles(
     from ahnlich_spark.operators import sketches as SK
 
     group_cols = list(group_cols)
-    state = {"summ": None, "last_id": -1}
-    persist = (
-        _DfStatePersist(value_stream.sparkSession, state_dir, "hist")
-        if state_dir else None
+    q, drain_summary = _persisted_fold(
+        value_stream, "hist",
+        lambda b: SK.histogram_summary(b, value_col, group_cols, bin_width),
+        lambda u: u.groupBy(*group_cols, "bin")
+        .agg(F.sum("cnt").cast("long").alias("cnt")),
+        state_dir, initial_summary,
+        "no batch processed and no initial_summary seeded",
     )
-    if persist:
-        loaded, last = persist.load()
-        if loaded is not None:
-            state["summ"], state["last_id"] = loaded, last
-    if state["summ"] is None and initial_summary is not None:
-        # materialize the warm start ONLY when the pointer missed —
-        # persisted state wins, and eagerly checkpointing a seed that
-        # is about to be discarded costs an O(state) job every restart
-        state["summ"] = initial_summary.localCheckpoint()
-
-    def _sink(batch_df: DataFrame, batch_id: int) -> None:
-        if persist and batch_id <= state["last_id"]:
-            persist.replay_guard(batch_df, batch_id, "hist")
-            return
-        stats = None
-        if persist:
-            # ledger stats ride the persisting write job (observe)
-            batch_df, stats = _observed_stats(batch_df)
-        bs = SK.histogram_summary(batch_df, value_col, group_cols, bin_width)
-        if state["summ"] is not None:
-            # batch frame as union receiver (see the KMV fold): keeps
-            # the action on the clone session for metric delivery;
-            # count addition is order-free
-            bs = (
-                bs.unionByName(state["summ"])
-                .groupBy(*group_cols, "bin")
-                .agg(F.sum("cnt").cast("long").alias("cnt"))
-            )
-        state["last_id"] = batch_id
-        if persist:
-            state["summ"] = persist.save(bs, batch_id, stats)
-        else:
-            state["summ"] = bs.localCheckpoint()
-
-    def drain_summary() -> DataFrame:
-        if state["summ"] is None:
-            raise ValueError("no batch processed and no initial_summary seeded")
-        return state["summ"]
 
     def drain() -> DataFrame:
         return SK.histogram_quantiles(drain_summary(), qs, group_cols, bin_width)
 
-    q = value_stream.writeStream.foreachBatch(_sink).outputMode("update").start()
     return q, drain, drain_summary
 
 
@@ -2404,6 +2315,10 @@ def streaming_heavy_hitters(
     if state_path:
         persisted = _read_json(state_path)
         if persisted is not None:
+            _require_pointer_keys(
+                persisted, ("counter_items", "n", "pruned", "batch_id"),
+                "mg", state_dir,
+            )
             # counter persisted as [key, count] PAIRS: JSON object keys
             # are always strings, which would silently retype int/float
             # values and split their counts after a restart
@@ -2470,7 +2385,7 @@ def streaming_heavy_hitters(
             "value", cand, k, capacity, state["n"], state["pruned"], verify,
         )
 
-    q = value_stream.writeStream.foreachBatch(_sink).outputMode("update").start()
+    q = _start_foreach_batch(value_stream, _sink, None)
     return q, drain_counter, drain_topk
 
 
@@ -2505,55 +2420,19 @@ def streaming_cms_counts(
     from ahnlich_spark.operators import sketches as SK
 
     group_cols = list(group_cols)
-    state = {"table": None, "last_id": -1}
-    persist = (
-        _DfStatePersist(value_stream.sparkSession, state_dir, "cms")
-        if state_dir else None
+    q, drain_table = _persisted_fold(
+        value_stream, "cms",
+        lambda b: SK.cms_table(b, value_col, group_cols, depth, width),
+        lambda u: u.groupBy(*group_cols, "row", "bucket")
+        .agg(F.sum("cnt").cast("long").alias("cnt")),
+        state_dir, initial_table,
+        "no batch processed and no initial_table seeded",
     )
-    if persist:
-        loaded, last = persist.load()
-        if loaded is not None:
-            state["table"], state["last_id"] = loaded, last
-    if state["table"] is None and initial_table is not None:
-        # materialize the warm start ONLY when the pointer missed —
-        # persisted state wins, and eagerly checkpointing a seed that
-        # is about to be discarded costs an O(state) job every restart
-        state["table"] = initial_table.localCheckpoint()
-
-    def _sink(batch_df: DataFrame, batch_id: int) -> None:
-        if persist and batch_id <= state["last_id"]:
-            persist.replay_guard(batch_df, batch_id, "cms")
-            return
-        stats = None
-        if persist:
-            # ledger stats ride the persisting write job (observe)
-            batch_df, stats = _observed_stats(batch_df)
-        bt = SK.cms_table(batch_df, value_col, group_cols, depth, width)
-        if state["table"] is not None:
-            # batch frame as union receiver (see the KMV fold): keeps
-            # the action on the clone session for metric delivery;
-            # count addition is order-free
-            bt = (
-                bt.unionByName(state["table"])
-                .groupBy(*group_cols, "row", "bucket")
-                .agg(F.sum("cnt").cast("long").alias("cnt"))
-            )
-        state["last_id"] = batch_id
-        if persist:
-            state["table"] = persist.save(bt, batch_id, stats)
-        else:
-            state["table"] = bt.localCheckpoint()
-
-    def drain_table() -> DataFrame:
-        if state["table"] is None:
-            raise ValueError("no batch processed and no initial_table seeded")
-        return state["table"]
 
     def estimate(keys_df: DataFrame) -> DataFrame:
         return SK.cms_estimate(drain_table(), keys_df, value_col,
                                group_cols, depth, width)
 
-    q = value_stream.writeStream.foreachBatch(_sink).outputMode("update").start()
     return q, estimate, drain_table
 
 
@@ -2582,21 +2461,12 @@ def streaming_embedding_drift(
     Returns ``(query, drain, drain_sums)``: ``drain()`` gives
     (dim, mean_a_e9 = baseline, mean_b_e9 = streamed, drift_e9),
     ``drain_sums()`` the raw (dim, n, sum_e9) STATE."""
-    state = {"sums": None, "last_id": -1}
-    persist = (
-        _DfStatePersist(vec_stream.sparkSession, state_dir, "drift")
-        if state_dir else None
-    )
-    if persist:
-        loaded, last = persist.load()
-        if loaded is not None:
-            state["sums"], state["last_id"] = loaded, last
-
     comp_e9 = F.round(F.col("comp").cast("double") * 1_000_000_000).cast("long")
 
-    def _batch_sums(df: DataFrame) -> DataFrame:
+    def summarize(batch_df: DataFrame) -> DataFrame:
         return (
-            df.select(F.posexplode(F.col(vec_col)).alias("dim", "comp"))
+            batch_df.filter(F.col(vec_col).isNotNull())
+            .select(F.posexplode(F.col(vec_col)).alias("dim", "comp"))
             .select("dim", comp_e9.alias("c"))
             .groupBy("dim")
             .agg(
@@ -2605,37 +2475,14 @@ def streaming_embedding_drift(
             )
         )
 
-    def _sink(batch_df: DataFrame, batch_id: int) -> None:
-        if persist and batch_id <= state["last_id"]:
-            persist.replay_guard(batch_df, batch_id, "drift")
-            return
-        stats = None
-        if persist:
-            # ledger stats ride the persisting write job (observe)
-            batch_df, stats = _observed_stats(batch_df)
-        bs = _batch_sums(batch_df.filter(F.col(vec_col).isNotNull()))
-        if state["sums"] is not None:
-            # batch frame as union receiver (see the KMV fold): keeps
-            # the action on the clone session for metric delivery;
-            # sum addition is order-free
-            bs = (
-                bs.unionByName(state["sums"])
-                .groupBy("dim")
-                .agg(
-                    F.sum("n").cast("long").alias("n"),
-                    F.sum("sum_e9").cast("long").alias("sum_e9"),
-                )
-            )
-        state["last_id"] = batch_id
-        if persist:
-            state["sums"] = persist.save(bs, batch_id, stats)
-        else:
-            state["sums"] = bs.localCheckpoint()
-
-    def drain_sums() -> DataFrame:
-        if state["sums"] is None:
-            raise ValueError("no batch processed yet")
-        return state["sums"]
+    q, drain_sums = _persisted_fold(
+        vec_stream, "drift", summarize,
+        lambda u: u.groupBy("dim").agg(
+            F.sum("n").cast("long").alias("n"),
+            F.sum("sum_e9").cast("long").alias("sum_e9"),
+        ),
+        state_dir, None, "no batch processed yet",
+    )
 
     def drain() -> DataFrame:
         cur = drain_sums().select(
@@ -2651,5 +2498,4 @@ def streaming_embedding_drift(
             .alias("drift_e9"),
         )
 
-    q = vec_stream.writeStream.foreachBatch(_sink).outputMode("update").start()
     return q, drain, drain_sums

@@ -1,6 +1,6 @@
 #!/usr/bin/env python
 """Capture .explain('formatted') for every registered gate into
-plans/r11/<name>_<tag>.txt. Usage: capture_plans.py <tag> [name ...]
+<name>_<tag>.txt next to this script. Usage: capture_plans.py <tag> [name ...]
 (default: all gates). Runs each gate function once (fixture work
 executes eagerly) and explains the returned DataFrame."""
 import os

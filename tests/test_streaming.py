@@ -1679,15 +1679,19 @@ def test_materialized_agg_missing_coords_pointer_raises(
     q.stop()
     ptr = os.path.join(state_dir, "mview_state.json")
     with open(ptr) as f:
-        p = json.load(f)
-    del p["extra"]
-    with open(ptr, "w") as f:
-        json.dump(p, f)
-    with pytest.raises(ValueError, match="coords.*delete the state_dir"):
-        streaming_materialized_agg(
-            engine.store_changes_stream("mvg", max_files_per_trigger=1),
-            replica, "mvgd", grp, measures, state_dir=state_dir,
-        )
+        good = json.load(f)
+    for key, match in (("extra", "coords.*delete the state_dir"),
+                       ("table", "table.*delete the state_dir"),
+                       ("batch_id", "batch_id.*delete the state_dir")):
+        p = dict(good)
+        del p[key]
+        with open(ptr, "w") as f:
+            json.dump(p, f)
+        with pytest.raises(ValueError, match=match):
+            streaming_materialized_agg(
+                engine.store_changes_stream("mvg", max_files_per_trigger=1),
+                replica, "mvgd", grp, measures, state_dir=state_dir,
+            )
 
 
 # ------------------------------------------------- keyed mview sink --
@@ -1997,16 +2001,19 @@ def test_streaming_join_view_guards(spark, engine, tmp_path):
     q.stop()
     ptr = os.path.join(state_dir, "mjoin_state.json")
     with open(ptr) as f:
-        p = json.load(f)
-    del p["coords_b"]
-    with open(ptr, "w") as f:
-        json.dump(p, f)
-    with pytest.raises(ValueError, match="coords.*delete the state_dir"):
-        streaming_materialized_join(
-            engine.store_changes_stream("sjg", max_files_per_trigger=1),
-            engine, "sjg", engine, "sjh", ja, jb, grp, {},
-            state_dir=state_dir,
-        )
+        good = json.load(f)
+    for key, match in (("coords_b", "coords.*delete the state_dir"),
+                       ("table", "table.*delete the state_dir")):
+        p = dict(good)
+        del p[key]
+        with open(ptr, "w") as f:
+            json.dump(p, f)
+        with pytest.raises(ValueError, match=match):
+            streaming_materialized_join(
+                engine.store_changes_stream("sjg", max_files_per_trigger=1),
+                engine, "sjg", engine, "sjh", ja, jb, grp, {},
+                state_dir=state_dir,
+            )
 
 
 def test_streaming_join_view_keyed_restart_and_catchup(
