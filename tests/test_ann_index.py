@@ -764,3 +764,103 @@ def test_batch_unknown_algorithm_error(indexed_engine):
     with pytest.raises(ValueError, match="unknown algorithm"):
         indexed_engine.get_sim_n_batch("vecs", [(0, VECS[0].tolist())],
                                        closest_n=2, algorithm="faiss")
+
+
+# ---------------------------------------------- per-call job-count pins --
+#
+# Spark jobs one GetSimN call runs, its result collected, on warm index
+# statistics. Job counts do not drift with the host the way wall time
+# does, so these pins show that a change to the dispatch left each
+# path's plans as they were. The stores are this section's own, so the
+# counts do not depend on which other tests ran first. The hnsw/ivf/pq
+# store keeps the default 64 IVF buckets: Spark lists more than 32
+# partition directories in a job of its own, so every store read a call
+# makes shows in its count.
+
+_PIN_N, _PIN_DIM = 1500, 16
+
+_JOBS_PER_CALL = {
+    "single_hnsw": 3,
+    "single_ivf": 3,
+    "single_pq": 3,
+    "single_kdtree": 2,
+    "single_cosine": 2,
+    "batch_cosine": 4,
+    "batch_hnsw_driver": 4,
+    "batch_hnsw_udf": 7,
+    "batch_ivf_driver": 4,
+    "batch_ivf_udf": 7,
+    "batch_pq": 4,
+    "batch_pq_chunked": 6,
+    "batch_pq_residual": 3,
+    "batch_hnsw_condition": 4,
+}
+
+
+@pytest.fixture(scope="module")
+def pin_engine(spark, tmp_path_factory):
+    from ahnlich_spark import Engine
+
+    vecs = _vectors(_PIN_N, _PIN_DIM, seed=23, n_clusters=40)
+    entries = [(v.tolist(), {"i": str(i)}) for i, v in enumerate(vecs)]
+    eng = Engine(spark, str(tmp_path_factory.mktemp("pin_wh")))
+    eng.brute_force_threshold = 64  # the pruned paths engage
+    eng.create_store("pv", dimension=_PIN_DIM)
+    eng.create_non_linear_algorithm_index("pv", ["hnsw", "ivf", "kdtree", "pq"])
+    eng.set("pv", entries)
+    eng.create_store("pr", dimension=_PIN_DIM)
+    eng.create_non_linear_algorithm_index(
+        "pr", ["ivf", "pq"],
+        config={"residual": True, "n_clusters": 12, "n_probe": 6})
+    eng.set("pr", entries)
+    return eng, vecs
+
+
+def _jobs_per_call(spark, run):
+    """Run once to warm the per-version index statistics, then count the
+    jobs a second run launches under its own job group. The status
+    store is filled from the listener bus asynchronously, so the bus is
+    drained before the read."""
+    sc = spark.sparkContext
+    run()
+    group = f"pin-{os.urandom(6).hex()}"
+    sc.setJobGroup(group, group)
+    try:
+        run()
+    finally:
+        for prop in ("spark.jobGroup.id", "spark.job.description",
+                     "spark.job.interruptOnCancel"):
+            sc.setLocalProperty(prop, None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+@pytest.mark.parametrize("case", sorted(_JOBS_PER_CALL))
+def test_get_sim_n_jobs_per_call_pinned(pin_engine, spark, case):
+    from ahnlich_spark.operators.predicates import In
+
+    eng, vecs = pin_engine
+    q = vecs[5].tolist()
+    probes = [(i, vecs[i * 13].tolist()) for i in range(4)]
+    kind, algo = case.split("_")[:2]
+    algo = S.COSINE if algo == "cosine" else algo
+    store = "pr" if case.endswith("residual") else "pv"
+    thresh = {"udf": 1, "chunked": 2}.get(case.rsplit("_", 1)[1])
+    cond = In("i", [str(i) for i in range(0, 600, 3)]) \
+        if case.endswith("condition") else None
+
+    def run():
+        if kind == "single":
+            return eng.get_sim_n(store, q, closest_n=5,
+                                 algorithm=algo).collect()
+        return eng.get_sim_n_batch(store, probes, closest_n=5,
+                                   algorithm=algo, condition=cond).collect()
+
+    if thresh is not None:
+        eng.BATCH_PLAN_THRESHOLD = thresh
+    try:
+        jobs = _jobs_per_call(spark, run)
+    finally:
+        if thresh is not None:
+            del eng.BATCH_PLAN_THRESHOLD
+    assert jobs == _JOBS_PER_CALL[case], (case, jobs)
