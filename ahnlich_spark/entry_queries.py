@@ -1857,7 +1857,7 @@ def _ivf_gate_centroids():
 
 
 def _hnsw_gate_min_cand() -> int:
-    # mirrors plans/engine._ann_top_k: max(4k, threshold//8, ef_construction)
+    # mirrors plans/engine._planner's hnsw quota: max(4k, threshold//8, ef_construction)
     from ahnlich_spark.catalog import HNSW_DEFAULTS
 
     return max(4 * _PRUNED_K, _PRUNED_BF_THRESHOLD // 8,
@@ -1892,7 +1892,8 @@ def _sig_sql(arr: str) -> str:
 
 
 def _pruned_lsh_oracle_sql() -> str:
-    """Replicates plans/engine._ann_top_k's hnsw branch: signatures,
+    """Replicates the single-probe hnsw path (plans/engine._ann_top_k
+    with operators/ann.LshPlanner): signatures,
     Hamming histogram radius planning (r* = max(floor, the min_cand-th
     smallest distance — identical to choose_radius's smallest radius
     with a filled quota), ball filter, exact cosine rescore."""
@@ -1965,7 +1966,8 @@ FROM scored ORDER BY score ASC, vec_id LIMIT {_PRUNED_K}
 
 
 def _pruned_batch_ivf_oracle_sql(n_probes: int = 4, k: int = 5) -> str:
-    """Replicates Engine._batch_ivf per probe: shared assignment table,
+    """Replicates Engine._batch_pruned with the IVF planner per probe:
+    shared assignment table,
     per-probe bucket ordering + quota planning, per-probe bucket
     filter, exact euclidean top-k."""
     cents, ctes = _ivf_assign_ctes()
@@ -2050,7 +2052,8 @@ def _pruned_gate_result(spark, sf_dir, eng, algo, metric):
 
 
 def _pruned_batch_oracle_sql(n_probes: int = 4, k: int = 5) -> str:
-    """Replicates Engine._batch_lsh: per-probe signature + radius
+    """Replicates Engine._batch_pruned with the LSH planner: per-probe
+    signature + radius
     planning (same min_cand formula), per-probe Hamming balls over ONE
     shared signature table, exact per-probe cosine top-k."""
     min_cand = _hnsw_gate_min_cand()
@@ -2082,7 +2085,7 @@ FROM ranked WHERE rank_n <= {k}
 
 @register("ann_pruned_batch_topk", _pruned_batch_oracle_sql())
 def ann_pruned_batch_topk(spark, sf_dir):
-    """Batch GetSimN through the PRUNED LSH path (Engine._batch_lsh):
+    """Batch GetSimN through the PRUNED LSH path (Engine._batch_pruned):
     per-probe Hamming balls planned driver-side, their sig-prefixes
     unioned into ONE partition-pruned candidate scan, each probe's own
     radius applied in a broadcast join — a whole retrieval batch costs
@@ -2184,7 +2187,7 @@ def ann_recall_eval(spark, sf_dir):
 
 @register("ann_pruned_batch_ivf_topk", _pruned_batch_ivf_oracle_sql())
 def ann_pruned_batch_ivf_topk(spark, sf_dir):
-    """Batch GetSimN through the pruned IVF path (Engine._batch_ivf):
+    """Batch GetSimN through the pruned IVF path (Engine._batch_pruned):
     per-probe bucket sets planned driver-side, their union pruning
     bucket partitions in ONE scan, per-probe membership via
     array_contains in a broadcast join."""

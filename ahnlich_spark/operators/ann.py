@@ -125,15 +125,6 @@ def sig_prefix_expr(sig: Column, n_planes: int, prefix_bits: int = PREFIX_BITS) 
 # <= n_clusters bucket counts) collected ONCE per store version, so query
 # planning costs zero cluster scans.
 
-def hamming_histogram(sig_counts: dict, qsig: int) -> dict:
-    """{hamming_distance: row_count} from a {signature: count} table."""
-    hist: dict = {}
-    for sig, cnt in sig_counts.items():
-        d = bin(int(sig) ^ qsig).count("1")
-        hist[d] = hist.get(d, 0) + cnt
-    return hist
-
-
 def choose_radius(hist: dict, min_candidates: int, min_radius: int, n_planes: int):
     """Smallest radius >= min_radius whose cumulative candidate count
     fills the quota; (None, total) when even the widest ball starves."""
@@ -176,44 +167,6 @@ def choose_probes(order, bucket_counts: dict, n_probe: int, min_candidates: int)
     return None, cum
 
 
-# --------------------------------------- distributed probe planning --
-# Above the engine's BATCH_PLAN_THRESHOLD the per-probe planning loop
-# moves OFF the driver: the same histograms/centroids (small by
-# construction) broadcast into Arrow-batched pandas UDFs over the probe
-# frame, each executor plans its slice with the IDENTICAL per-probe
-# logic (choose_probes / choose_radius on the same statistics), and
-# only the bounded union of buckets/prefixes (<= n_clusters / 2^PREFIX
-# _BITS values) ever returns to the driver. A million-probe batch costs
-# the driver one tiny distinct-collect instead of a million argsorts.
-
-def plan_ivf_buckets_udf(centroids: np.ndarray, bucket_counts: dict,
-                         n_probe: int, min_candidates: int, dim: int):
-    """pandas UDF ``qkey -> array<int>`` of planned bucket ids (NULL for
-    a starved probe — the caller falls back to the exact batch plan).
-    Bit-parity with the driver loop: float64 centroid distances,
-    stable argsort, same choose_probes widening."""
-    import pandas as pd
-
-    c64 = np.ascontiguousarray(centroids, dtype=np.float64)
-    counts = {int(k): v for k, v in bucket_counts.items()}
-
-    def plan(keys):
-        out = []
-        for v in keys:
-            q = np.asarray(list(v), dtype=np.float64)
-            if q.shape[0] != dim:
-                raise ValueError(
-                    f"probe dimension {q.shape[0]} != store dimension {dim}"
-                )
-            order = np.argsort(((c64 - q) ** 2).sum(axis=1), kind="stable")
-            picked, _cum = choose_probes(order, counts, n_probe, min_candidates)
-            out.append(None if picked is None else [int(b) for b in picked])
-        return pd.Series(out, dtype=object)
-
-    plan.__annotations__ = {"keys": pd.Series, "return": pd.Series}
-    return F.pandas_udf(T.ArrayType(T.IntegerType()))(plan)
-
-
 def _popcount64(x: np.ndarray) -> np.ndarray:
     """Vectorized 64-bit popcount (numpy<2 has no bitwise_count)."""
     x = x.astype(np.uint64, copy=True)
@@ -225,48 +178,125 @@ def _popcount64(x: np.ndarray) -> np.ndarray:
     return (x * np.uint64(0x0101010101010101)) >> np.uint64(56)
 
 
-def plan_lsh_balls_udf(planes: np.ndarray, sig_counts: dict,
-                       min_candidates: int, min_radius: int, n_planes: int,
-                       prefix_bits: int = PREFIX_BITS):
-    """pandas UDF ``qkey -> struct(qsig, qradius, qprefixes)`` planning
-    one Hamming ball per probe executor-side (NULL qradius = starved).
-    Signatures use the exact ``signature_of`` chain (build/query parity);
-    the per-probe histogram is one vectorized popcount + bincount over
-    the broadcast signature table."""
-    import pandas as pd
+# ----------------------------------------------- per-probe index planners --
+# One planner per pruned index. ``plan(vec)`` is the WHOLE per-probe
+# planning rule; the single-probe query, the batch driver loop and the
+# distributed pandas-UDF planner (``plan_udf``) all call it, so the three
+# faces cannot drift apart. A plan is ``(row, keys)``: ``row`` holds the
+# values of ``plan_cols`` (what the batch join needs per probe) and
+# ``keys`` the values of ``prune_col`` the probe's candidates can carry
+# (what prunes partition directories); ``None`` means the probe's
+# candidate quota cannot be filled and the caller answers exactly.
 
-    sigs = np.fromiter((int(s) for s in sig_counts), dtype=np.uint64,
-                       count=len(sig_counts))
-    cnts = np.fromiter((float(c) for c in sig_counts.values()),
-                       dtype=np.float64, count=len(sig_counts))
+class IvfPlanner:
+    """IVF probe sets: the ``n_probe``+ buckets nearest the query (float64
+    centroid distances, stable argsort) widened by ``choose_probes``
+    until their counted rows fill ``min_candidates``."""
 
-    def plan(keys):
-        qsig_o, rad_o, pref_o = [], [], []
-        for v in keys:
-            qsig = signature_of(v, planes)
-            d = _popcount64(np.bitwise_xor(sigs, np.uint64(qsig))).astype(np.int64)
-            hist = np.bincount(d, weights=cnts, minlength=n_planes + 1)
-            cum, radius = 0.0, None
-            for r in range(n_planes + 1):
-                cum += hist[r] if r < len(hist) else 0.0
-                if r >= min_radius and cum >= min_candidates:
-                    radius = r
-                    break
-            qsig_o.append(qsig)
-            rad_o.append(radius)
-            pref_o.append(
-                None if radius is None
-                else [int(p) for p in
-                      feasible_prefixes(qsig, n_planes, radius, prefix_bits)]
-            )
-        return pd.DataFrame(
-            {"qsig": qsig_o, "qradius": rad_o, "qprefixes": pref_o}
+    prune_col = "_ann_bucket"
+    plan_cols = ("qbuckets",)
+    plan_schema = "qbuckets array<int>"
+
+    def __init__(self, centroids: np.ndarray, bucket_counts: dict,
+                 n_probe: int, min_candidates: int):
+        self.centroids = centroids
+        self._c64 = np.ascontiguousarray(centroids, dtype=np.float64)
+        self._counts = {int(k): v for k, v in bucket_counts.items()}
+        self._n_probe = int(n_probe)
+        self._quota = min_candidates
+
+    def plan(self, vec):
+        q = np.asarray(list(vec), dtype=np.float64)
+        order = np.argsort(((self._c64 - q) ** 2).sum(axis=1), kind="stable")
+        picked, _cum = choose_probes(order, self._counts, self._n_probe,
+                                     self._quota)
+        return None if picked is None else ((picked,), picked)
+
+    def probe_filter(self, row, keys) -> Column:
+        return F.col(self.prune_col).isin(keys)
+
+    def join_cond(self) -> Column:
+        return F.array_contains(F.col("qbuckets"), F.col(self.prune_col))
+
+
+class LshPlanner:
+    """LSH Hamming balls: the query's signature and the smallest radius
+    >= ``min_radius`` whose ball holds ``min_candidates`` rows of the
+    signature histogram (one vectorized popcount + bincount over the
+    table); its feasible signature prefixes prune the scan."""
+
+    prune_col = "_ann_sigp"
+    plan_cols = ("qsig", "qradius")
+    plan_schema = "qsig long, qradius int"
+
+    def __init__(self, planes: np.ndarray, sig_counts: dict,
+                 min_candidates: int, min_radius: int):
+        self._planes = planes
+        self._n_planes = len(planes)
+        self._sigs = np.fromiter((int(s) for s in sig_counts), dtype=np.uint64,
+                                 count=len(sig_counts))
+        self._cnts = np.fromiter((float(c) for c in sig_counts.values()),
+                                 dtype=np.float64, count=len(sig_counts))
+        self._quota = min_candidates
+        self._min_radius = int(min_radius)
+
+    def plan(self, vec):
+        qsig = signature_of(vec, self._planes)
+        d = _popcount64(np.bitwise_xor(self._sigs, np.uint64(qsig)))
+        hist = np.bincount(d.astype(np.int64), weights=self._cnts,
+                           minlength=self._n_planes + 1)
+        radius, _cum = choose_radius(dict(enumerate(hist.tolist())),
+                                     self._quota, self._min_radius,
+                                     self._n_planes)
+        if radius is None:
+            return None
+        return (qsig, radius), feasible_prefixes(qsig, self._n_planes, radius)
+
+    def probe_filter(self, row, keys) -> Column:
+        qsig, radius = row
+        return F.col(self.prune_col).isin(keys) & (
+            F.bit_count(F.col("_ann_sig").bitwiseXOR(F.lit(qsig))) <= radius
         )
 
+    def join_cond(self) -> Column:
+        return (F.bit_count(F.col("_ann_sig").bitwiseXOR(F.col("qsig")))
+                <= F.col("qradius"))
+
+
+# --------------------------------------- distributed probe planning --
+# Above the engine's BATCH_PLAN_THRESHOLD the per-probe planning loop
+# moves OFF the driver: the planner (its histograms/centroids are small
+# by construction) ships into an Arrow-batched pandas UDF over the probe
+# frame, each executor plans its slice with the IDENTICAL ``plan`` the
+# driver loop calls, and only the bounded union of prune keys (<=
+# n_clusters / 2^PREFIX_BITS values) ever returns to the driver. A
+# million-probe batch costs the driver one tiny distinct-collect instead
+# of a million argsorts.
+
+def plan_udf(planner, dim: int):
+    """pandas UDF ``qkey -> struct(<planner.plan_cols>, qkeys array<int>)``
+    running ``planner.plan`` per probe; a starved probe comes back with
+    every field NULL (the caller falls back to the exact batch plan)."""
+    import pandas as pd
+
+    names = [*planner.plan_cols, "qkeys"]
+
+    def plan(keys):
+        cols = [[] for _ in names]
+        for v in keys:
+            if len(v) != dim:
+                raise ValueError(
+                    f"probe dimension {len(v)} != store dimension {dim}"
+                )
+            p = planner.plan(v)
+            vals = [None] * len(names) if p is None else [*p[0], p[1]]
+            for col, val in zip(cols, vals):
+                col.append(val)
+        return pd.DataFrame({n: pd.Series(c, dtype=object)
+                             for n, c in zip(names, cols)})
+
     plan.__annotations__ = {"keys": pd.Series, "return": pd.DataFrame}
-    return F.pandas_udf(
-        "qsig long, qradius int, qprefixes array<int>"
-    )(plan)
+    return F.pandas_udf(f"{planner.plan_schema}, qkeys array<int>")(plan)
 
 
 def lsh_top_k(

@@ -63,6 +63,7 @@ def top_k_batch(
     precision: str = "float",
     score_col: str = "similarity",
     rank_col: Optional[str] = None,
+    on: Optional[Column] = None,
 ) -> DataFrame:
     """Top-k per query for a whole DataFrame of query vectors — the
     batch face of GetSimN (the reference answers one query per gRPC
@@ -77,8 +78,12 @@ def top_k_batch(
     partitions) after the window's partial ranking.
 
     ``rank_col`` keeps the per-query rank (1 = closest) in the output.
+    ``on`` restricts each query to the store rows the join condition
+    admits (the engine's pruned ANN paths join each probe to its own
+    candidates); without it every query scores every row.
     """
-    joined = df.crossJoin(F.broadcast(queries))
+    queries = F.broadcast(queries)
+    joined = df.crossJoin(queries) if on is None else df.join(queries, on)
     score = S.score_expr(metric, F.col(key_col), F.col(query_key_col), precision)
     scored = joined.withColumn(score_col, score)
     from pyspark.sql import Window

@@ -82,6 +82,14 @@ def internal_columns(df: DataFrame):
     return [c for c in df.columns if c.startswith(INTERNAL_PREFIXES)]
 
 
+def drop_internal(df: DataFrame) -> DataFrame:
+    """``df`` without its internal index columns: what
+    ``read_store(canonical=True)`` returns, derived from a frame already
+    read with ``canonical=False``."""
+    extra = internal_columns(df)
+    return df.drop(*extra) if extra else df
+
+
 def _base_schema(meta: StoreMeta) -> Optional[T.StructType]:
     """The catalog-pinned read schema of the CURRENT base version, or
     None (pre-pin catalogs / historical versions → infer)."""
@@ -211,11 +219,7 @@ def read_store(
     df = _read_pinned(spark, _base_schema(meta), catalog.store_path(meta))
     if meta.deltas:
         df = _merged_view(spark, catalog, meta, df)
-    if canonical:
-        extra = internal_columns(df)
-        if extra:
-            df = df.drop(*extra)
-    return df
+    return drop_internal(df) if canonical else df
 
 
 def read_changes(

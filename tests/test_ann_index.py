@@ -429,7 +429,7 @@ def test_batch_planning_dim_check_threshold_invariant(indexed_engine, spark):
     null_df = spark.createDataFrame(
         [(0, VECS[0].tolist()), (1, None)], "qid long, qkey array<float>"
     )
-    for algo in ("hnsw", "ivf"):
+    for algo in ("hnsw", "ivf", "pq", S.COSINE):
         for thresh in (10_000, 1):
             eng.BATCH_PLAN_THRESHOLD = thresh
             try:
@@ -761,9 +761,14 @@ def test_batch_conditioned_ann_equals_singles(indexed_engine, spark):
 def test_batch_unknown_algorithm_error(indexed_engine):
     import pytest
 
-    with pytest.raises(ValueError, match="unknown algorithm"):
+    with pytest.raises(ValueError, match="unknown algorithm") as batch:
         indexed_engine.get_sim_n_batch("vecs", [(0, VECS[0].tolist())],
                                        closest_n=2, algorithm="faiss")
+    # the single-probe call raises the same message, from the same place
+    with pytest.raises(ValueError, match="unknown algorithm") as single:
+        indexed_engine.get_sim_n("vecs", VECS[0].tolist(), closest_n=2,
+                                 algorithm="faiss")
+    assert str(single.value) == str(batch.value)
 
 
 # ---------------------------------------------- per-call job-count pins --
@@ -864,3 +869,28 @@ def test_get_sim_n_jobs_per_call_pinned(pin_engine, spark, case):
         if thresh is not None:
             del eng.BATCH_PLAN_THRESHOLD
     assert jobs == _JOBS_PER_CALL[case], (case, jobs)
+
+
+def test_lsh_planner_matches_loop_histogram():
+    """LshPlanner takes each probe's Hamming histogram from one
+    vectorized popcount + bincount over the signature table; on integer
+    counts it must choose the radius and prefixes the plain loop over
+    the table chooses."""
+    from ahnlich_spark.operators import ann as A
+
+    planes = A.hyperplanes(DIM, 16, 7)
+    counts = {}
+    for v in VECS[:2000]:
+        sig = A.signature_of(v, planes)
+        counts[sig] = counts.get(sig, 0) + 1
+    planner = A.LshPlanner(planes, counts, 100, 3)
+    for v in VECS[::250]:
+        qsig = A.signature_of(v, planes)
+        hist = {}
+        for sig, cnt in counts.items():
+            d = bin(sig ^ qsig).count("1")
+            hist[d] = hist.get(d, 0) + cnt
+        radius, _cum = A.choose_radius(hist, 100, 3, 16)
+        assert radius is not None
+        assert planner.plan(v) == (
+            (qsig, radius), A.feasible_prefixes(qsig, 16, radius))
