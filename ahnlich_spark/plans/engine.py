@@ -1494,17 +1494,13 @@ class Engine:
         meta = self.catalog.get_store(store, schema)
         self._check_dims(meta, [search_input])
         _check_algorithm(algorithm)
-        if condition is not None:
-            df = self._pred_filtered(meta, condition)
-        else:
-            df = read_store(self.spark, self.catalog, meta)
         metric = algorithm
         if algorithm in NON_LINEAR_ALGOS:
             cfg = self._ann_config(meta, algorithm)
             metric = cfg["distance"]
             if algorithm != "kdtree" and condition is None:
                 return self._ann_top_k(meta, algorithm, cfg, search_input,
-                                       closest_n, precision, df)
+                                       closest_n, precision)
         # Exact: linear metrics; kdtree — the reference KD-tree n_nearest
         # is EXACT k-NN (kdtree.rs:437-529), the exact scan is Spark's
         # natural bounded top-k and needs no artifact; and conditioned
@@ -1513,11 +1509,15 @@ class Engine:
         # satisfies the >0.9 recall contract. The condition applies up
         # front through the index-aware path: indexed keys prune the
         # scan before any scoring happens.
+        if condition is not None:
+            df = self._pred_filtered(meta, condition)
+        else:
+            df = read_store(self.spark, self.catalog, meta)
         return top_k_similar(df, search_input, metric, closest_n,
                              precision=precision)
 
     def _ann_top_k(self, meta, algorithm, cfg, search_input, closest_n,
-                   precision, df) -> DataFrame:
+                   precision) -> DataFrame:
         """Approximate top-k through the MATERIALIZED index from ONE
         store read: hnsw/ivf plan the probe with the index's planner
         (``_planner``, the one the batch paths call) from cached
@@ -1537,7 +1537,7 @@ class Engine:
         # so the output schema does not flip across the pruned/exact
         # boundary on predicate-indexed stores
         return top_k_similar(
-            df if cands is None else drop_internal(cands), search_input,
+            drop_internal(raw if cands is None else cands), search_input,
             cfg["distance"], closest_n, precision=precision,
         )
 

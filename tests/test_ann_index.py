@@ -785,9 +785,9 @@ def test_batch_unknown_algorithm_error(indexed_engine):
 _PIN_N, _PIN_DIM = 1500, 16
 
 _JOBS_PER_CALL = {
-    "single_hnsw": 3,
-    "single_ivf": 3,
-    "single_pq": 3,
+    "single_hnsw": 2,
+    "single_ivf": 2,
+    "single_pq": 2,
     "single_kdtree": 2,
     "single_cosine": 2,
     "batch_cosine": 4,
@@ -869,6 +869,46 @@ def test_get_sim_n_jobs_per_call_pinned(pin_engine, spark, case):
         if thresh is not None:
             del eng.BATCH_PLAN_THRESHOLD
     assert jobs == _JOBS_PER_CALL[case], (case, jobs)
+
+
+@pytest.mark.parametrize("algo,artifact", [("ivf", "ivf_centroids.npy"),
+                                           ("pq", "pq_codebooks.npy")])
+def test_missing_artifact_answers_exactly(spark, tmp_path_factory, algo,
+                                         artifact):
+    """With its persisted artifact deleted, an index answers with the
+    exact scan on both faces: single == batch == exact top-k. The
+    single-probe query runs the jobs of the linear scan under the same
+    metric; it neither trains a new quantizer or codebook per query nor
+    persists one."""
+    from ahnlich_spark import Engine
+
+    vecs = _vectors(800, 8, seed=5, n_clusters=20)
+    eng = Engine(spark, str(tmp_path_factory.mktemp("noart_wh")))
+    eng.brute_force_threshold = 100  # the pruned paths would engage
+    eng.create_store("na", dimension=8)
+    eng.create_non_linear_algorithm_index("na", [algo])
+    eng.set("na", [(v.tolist(), {}) for v in vecs])
+    meta = eng.catalog.get_store("na")
+    path = eng.catalog.store_aux_path(meta, artifact)
+    os.remove(path)
+    metric = meta.non_linear_config[algo]["distance"]
+    probes = [(i, vecs[i * 31].tolist()) for i in range(3)]
+    batch = {}
+    for r in eng.get_sim_n_batch("na", probes, closest_n=5,
+                                 algorithm=algo).collect():
+        batch.setdefault(r["qid"], []).append((r["rank_n"], r["id"]))
+    for pid, v in probes:
+        single = [r["id"] for r in
+                  eng.get_sim_n("na", v, closest_n=5, algorithm=algo).collect()]
+        exact = [r["id"] for r in
+                 top_k_similar(eng.store_df("na"), v, metric, 5).collect()]
+        assert single == exact == [i for _rk, i in sorted(batch[pid])], pid
+    def jobs(algorithm):
+        return _jobs_per_call(spark, lambda: eng.get_sim_n(
+            "na", probes[0][1], closest_n=5, algorithm=algorithm).collect())
+
+    assert jobs(algo) == jobs(metric)
+    assert not os.path.exists(path)
 
 
 def test_lsh_planner_matches_loop_histogram():
