@@ -456,15 +456,13 @@ def ivf_top_k(
     else:
         base = assign_buckets(df, centroids)
 
-    q = np.asarray(list(query_vector), dtype=np.float64)
-    order = np.argsort(((centroids.astype(np.float64) - q) ** 2).sum(axis=1), kind="stable")
-    min_candidates = max(4 * k, brute_force_threshold // 8)
     # one histogram pass picks the probe width (same trick as the LSH
     # radius histogram — never re-evaluate assignment per attempt)
     hist = dict(base.groupBy("bucket").count().collect())
-    picked, _cum = choose_probes(order, hist, n_probe, min_candidates)
-    if picked is None:
+    plan = IvfPlanner(centroids, hist, n_probe,
+                      max(4 * k, brute_force_threshold // 8)).plan(query_vector)
+    if plan is None:
         return top_k_similar(df.drop("bucket") if "bucket" in df.columns else df,
                              query_vector, metric, k, precision=precision)
-    cands = base.filter(F.col("bucket").isin(picked)).drop("bucket")
+    cands = base.filter(F.col("bucket").isin(plan[1])).drop("bucket")
     return top_k_similar(cands, query_vector, metric, k, precision=precision)
