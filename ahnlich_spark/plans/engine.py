@@ -1318,13 +1318,16 @@ class Engine:
     def _planner(self, meta, algorithm, closest_n, quota=None):
         """The per-probe planner of pruned index ``algorithm``
         (operators/ann.py: ``LshPlanner`` for hnsw, ``IvfPlanner`` for
-        ivf), or None when the exact scan answers instead: the store is
-        at or below the brute-force threshold (the reference's
+        ivf), or None when the store does not carry that index (pq
+        without ivf), or when the exact scan answers instead: the store
+        is at or below the brute-force threshold (the reference's
         accept-list shortcut, hnsw/index.rs:24) or the index artifact
         (histogram, centroids) is missing. ``quota`` is the candidate
         count each probe must reach, by default max(4k, threshold/8)."""
         from ahnlich_spark.operators import ann as A
 
+        if algorithm not in meta.non_linear:
+            return None
         cfg = self._ann_config(meta, algorithm)
         state = self._ann_state(meta, algorithm)
         if state["count"] <= self.brute_force_threshold:
@@ -1389,8 +1392,7 @@ class Engine:
         if (books is None or self._ann_state(meta, "pq")["count"]
                 <= self.brute_force_threshold):
             return self._rank_exact(raw, probes, metric, closest_n, precision)
-        ivf = (self._planner(meta, "ivf", closest_n, quota=n_cand)
-               if "ivf" in meta.non_linear else None)
+        ivf = self._planner(meta, "ivf", closest_n, quota=n_cand)
 
         def chunk(rows):
             # IVF-PQ composition, batch face: when the store also carries
@@ -1440,8 +1442,7 @@ class Engine:
         never wrong."""
         from ahnlich_spark.operators.pq import pq_top_k_batch_residual
 
-        ivf = (self._planner(meta, "ivf", closest_n, quota=n_cand)
-               if "ivf" in meta.non_linear else None)
+        ivf = self._planner(meta, "ivf", closest_n, quota=n_cand)
         if books is None or ivf is None:
             return self._rank_exact(raw, probes, metric, closest_n, precision)
         every = list(range(len(ivf.centroids)))
@@ -1569,8 +1570,7 @@ class Engine:
             return None
         q = [float(x) for x in search_input]
         n_cand = max(4 * closest_n, int(cfg["candidates"]))
-        ivf = (self._planner(meta, "ivf", closest_n, quota=n_cand)
-               if "ivf" in meta.non_linear else None)
+        ivf = self._planner(meta, "ivf", closest_n, quota=n_cand)
         plan = None if ivf is None else ivf.plan(q)
         scan = raw if plan is None else raw.filter(ivf.probe_filter(*plan))
         if cfg.get("residual") and "_ann_bucket" in raw.columns:
