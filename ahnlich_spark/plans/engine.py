@@ -297,7 +297,7 @@ class Engine:
     AUTO_COMPACT_SEGMENTS = 16
 
     # Probe batches above this size skip the driver-side planning loop
-    # of the one pruned batch path, _batch_pruned (VERDICT r03 #4): the
+    # of the one pruned batch path, _batch_pruned: the
     # index's per-probe planner (operators/ann.py IvfPlanner for ivf,
     # LshPlanner for hnsw) runs in a pandas UDF over the probe frame
     # (ann.plan_udf), and only the bounded union of prune keys (buckets
@@ -1254,7 +1254,7 @@ class Engine:
         index's planner (``_planner``) plans every probe from cached
         statistics — a driver loop up to BATCH_PLAN_THRESHOLD probes, a
         distributed pandas-UDF planner above it (only the bounded union
-        of prune keys returns to the driver; VERDICT r03 #4). That
+        of prune keys returns to the driver). That
         union prunes partitions in ONE candidate scan, and a broadcast
         join on the planner's join condition keeps each probe to its
         own candidates, so per-probe answers equal single get_sim_n
